@@ -61,14 +61,24 @@ def use_reliable_checkpoints(spark) -> bool:
     checkpoints never enter ``getPersistentRDDs``, so ``_release_ids``
     is a natural no-op and file cleanup belongs to
     ``spark.cleaner.referenceTracking.cleanCheckpoints``.
+
+    A truthy env override with no checkpoint directory is a half-set
+    configuration and raises ``ValueError`` here, instead of Spark's
+    "Checkpoint directory has not been set" at the first checkpoint.
     """
     env = os.environ.get("SPARK_GRAFT_RELIABLE_CKPT", "").strip().lower()
-    if env:
-        return env not in ("0", "false", "no")
-    try:
-        return spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    except Exception:
+    if env in ("0", "false", "no"):
         return False
+    try:
+        has_dir = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+    except Exception:
+        has_dir = False
+    if env and not has_dir:
+        raise ValueError(
+            f"SPARK_GRAFT_RELIABLE_CKPT={env!r} asks for reliable "
+            "checkpoints but no checkpoint directory is set: call "
+            "SparkContext.setCheckpointDir(<dir>) or unset the variable")
+    return has_dir
 
 
 def release_result(df: DataFrame) -> None:

@@ -1,6 +1,7 @@
 """Product quantization (PQ) — the vector-compression layer an ANN
 index at 100 TB sits on (Jégou et al., "Product Quantization for
-Nearest Neighbor Search", TPAMI 2011).
+Nearest Neighbor Search", TPAMI 2011) — and the one Lloyd trainer
+shared with the cosine k-means of ``operators/similarity.py``.
 
 Split each d-dim vector into ``m`` subvectors; per subspace, learn a
 ``k``-centroid codebook with L2 Lloyd's k-means; encode every subvector
@@ -9,18 +10,23 @@ as its nearest-centroid index.  Storage drops from ``4·d`` bytes
 computation scans codes instead of floats.
 
 Scale shape: all ``m`` subspace k-means run JOINTLY — each Lloyd
-iteration is ONE job over the (vid, subspace, subvector) exploded view
-(one scan of the corpus, assignment as a literal-codebook fold, update
-as a (subspace, cluster, position) hash-agg whose full output is
-m·k·(d/m) doubles).  Driver traffic per iteration is those few KB of
-centroids; encoding is a single narrow map stage with the codebooks as
-plan literals — no join, no shuffle of vectors, no Python.
+iteration is ONE job over the (grp, vid, v) exploded view (one scan of
+the corpus, assignment as a codebook fold, update as a (grp, code, pos)
+hash-agg whose full output is m·k·(d/m) doubles).  Driver traffic per
+iteration is those few KB of centroids.  Codebooks ride a one-row
+broadcast relation (``codebook_relation``): training, encoding and ADC
+cross-join it as a broadcast nested-loop join against one row — a
+per-partition map, still no shuffle of vectors and no Python.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+Books = list[list[list[float]]]
 
 
 def subvector(vec_col: str, j: int, sub_dim: int) -> F.Column:
@@ -30,163 +36,25 @@ def subvector(vec_col: str, j: int, sub_dim: int) -> F.Column:
         lambda x: x.cast("double"))
 
 
-def _codebook_lit(codebook: list[list[float]]) -> F.Column:
-    return F.array(*[
-        F.named_struct(F.lit("code"), F.lit(i),
-                       F.lit("c"), F.array(*[F.lit(float(x)) for x in c]))
-        for i, c in enumerate(codebook)])
+def codebook_relation(spark, books: Books) -> DataFrame:
+    """ALL codebooks as ONE broadcast row —
+    ``__books array<array<struct<code:int,c:array<double>>>>``, book
+    ``g`` at ``element_at(__books, g + 1)``.
 
-
-def _codebooks_data(spark, books: list[list[list[float]]]):
-    """ALL m codebooks as ONE broadcastable row —
-    ``__books array<array<struct<code:int,c:array<double>>>>``.
-
-    r12 (the r11 k-means broadcast-data lesson applied to PQ): the PQ
-    family shipped its codebooks as plan LITERALS — m*k named_structs
-    of sub_dim doubles each (m=16, k=32 for the ADC entries: ~2,500
-    literal leaves) rebuilt per Lloyd iteration, per encode, and per
-    ADC table build.  That is thousands of py4j round-trips at
-    plan-build time plus a fresh Janino compile whenever the literals
-    change — the sf0.01 full-registry sweep measured ann_pq_adc_topk /
-    _recall_check at 13.5/14.7 s of BUILD, the two most expensive
-    entries in the whole registry.  Shipping the codebooks as data in
-    a 1-row broadcast LocalRelation keeps the plan O(1) in m*k and
-    reuses the generated class across iterations; the fold itself is
-    unchanged (``argmin_code_expr`` accepts the broadcast COLUMN), so
-    codes/sqerr are bit-identical (asserted in
-    tools/probe_pq_r12.py: books equal, encode rows equal).  Measured
-    same-session alternating (sf0.1, 16x32): trainer 4.52 -> 1.66 s,
-    encode noop 4.25 -> 2.07 s."""
+    Centroids travel as data on the broadcast wire (as MLlib ships its
+    centroid matrix), not as plan literals: the plan stays O(1) in
+    m·k·d and every Lloyd iteration reuses the same generated class.
+    The literal form (m=16, k=32: ~2,500 literal leaves per plan) cost
+    thousands of py4j round-trips and a fresh Janino compile per
+    iteration; measured same-session alternating at sf0.1, 16x32:
+    trainer 4.52 -> 1.66 s, encode 4.25 -> 2.07 s, with books and
+    encode rows identical (bench_runs/r12_probes.md).  Callers
+    ``crossJoin`` it — a 1-row build side is the plan-lint whitelisted
+    BroadcastNestedLoopJoin shape."""
     data = [([[(i, list(map(float, c))) for i, c in enumerate(cb)]
               for cb in books],)]
-    return spark.createDataFrame(
-        data, "__books array<array<struct<code:int,c:array<double>>>>")
-
-
-def _with_books(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
-    """Cross-join the 1-row codebook relation onto ``df`` (broadcast:
-    a 1-row build side is a per-partition map, the plan-lint
-    whitelisted shape assign_centroids already uses)."""
-    return df.crossJoin(F.broadcast(_codebooks_data(df.sparkSession, books)))
-
-
-def argmin_code_expr(codebook, sub_col: F.Column) -> F.Column:
-    """struct(code, sqerr): index of the L2-nearest codebook centroid
-    and the squared distance to it — one fold over the codebook (a
-    python list of centroids, or an already-literal array<struct>
-    Column), strict ``<`` keeps the lowest code on ties
-    (deterministic).  named_struct throughout: .alias() on struct
-    fields is dropped inside higher-order-function lambdas, which
-    would type-mismatch the CASE branches."""
-    cb = codebook if isinstance(codebook, F.Column) \
-        else _codebook_lit(codebook)
-
-    def merge(acc, entry):
-        d2 = F.aggregate(
-            F.zip_with(sub_col, entry["c"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda s, x: s + x)
-        return (F.when(d2 < acc["sqerr"],
-                       F.named_struct(F.lit("code"), entry["code"],
-                                      F.lit("sqerr"), d2))
-                .otherwise(acc))
-
-    init = F.named_struct(F.lit("code"), F.lit(-1),
-                          F.lit("sqerr"), F.lit(float("inf")))
-    return F.aggregate(cb, init, merge)
-
-
-def _subspace_view(vectors: DataFrame, m: int, sub_dim: int,
-                   id_col: str, vec_col: str) -> DataFrame:
-    """(vid, sub, sv): every vector exploded into its m subvectors —
-    one scan produces all subspaces' training rows."""
-    arr = F.array(*[
-        F.named_struct(F.lit("sub"), F.lit(j),
-                       F.lit("sv"), subvector(vec_col, j, sub_dim))
-        for j in range(m)])
-    return (vectors.select(F.col(id_col).alias("vid"),
-                           F.explode(arr).alias("e"))
-            .select("vid", F.col("e.sub").alias("sub"),
-                    F.col("e.sv").alias("sv")))
-
-
-def pq_train(vectors: DataFrame, dim: int, m: int = 8, k: int = 16,
-             n_iter: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> list[list[list[float]]]:
-    """Joint per-subspace codebooks: ``m`` L2 k-means runs fused into
-    one job per Lloyd iteration.  Deterministic: seeds are the ``k``
-    vectors with smallest md5(id) (their m slices seed all m
-    subspaces), assignment ties break on the lowest code, update is
-    exact groupBy-avg; an empty cluster keeps its centroid.  Returns
-    ``m`` codebooks of ``k`` centroids."""
-    assert dim % m == 0, "dim must divide into m equal subspaces"
-    sub_dim = dim // m
-    seeds = (vectors
-             .select(F.col(id_col).alias("vid"),
-                     F.transform(vec_col, lambda x: x.cast("double"))
-                     .alias("v"))
-             .orderBy(F.md5(F.col("vid").cast("string")), "vid")
-             .limit(k).collect())
-    books = [[list(r["v"])[j * sub_dim:(j + 1) * sub_dim] for r in seeds]
-             for j in range(m)]
-    # Persist the exploded view: every Lloyd iteration re-reads it, and
-    # recomputing means re-scanning + re-exploding the corpus per
-    # iteration.  (At 100 TB persist to MEMORY_AND_DISK on executors —
-    # still one corpus scan total instead of n_iter scans.)
-    sub = _subspace_view(vectors, m, sub_dim, id_col, vec_col).persist()
-    try:
-        return _lloyd_iterations(sub, books, m, k, n_iter)
-    finally:
-        sub.unpersist()
-
-
-def _lloyd_iterations(sub: DataFrame, books: list[list[list[float]]],
-                      m: int, k: int, n_iter: int) -> list[list[list[float]]]:
-    # r12: codebooks ride a 1-row broadcast relation as DATA (see
-    # _codebooks_data — plan O(1) in m*k, same generated class every
-    # iteration), and the (sub, cid, pos, mu) rows are collected
-    # straight off the FIRST aggregation with the centroid arrays
-    # assembled in the driver — the former second groupBy
-    # (collect_list + array_sort + transform) was an extra
-    # exchange+aggregate stage per iteration to do µs-scale array
-    # assembly over m*k*sub_dim rows (the same fusion shipped in
-    # kmeans_centroids this round).  Books bit-identical either way
-    # (probe-asserted); an empty cluster keeps its previous centroid.
-    for _ in range(n_iter):
-        cb = F.element_at(F.col("__books"), F.col("sub") + 1)
-        code = argmin_code_expr(cb, F.col("sv"))["code"]
-        rows = (_with_books(sub, books)
-                .select("sub", code.alias("cid"),
-                        F.posexplode("sv").alias("pos", "x"))
-                .groupBy("sub", "cid", "pos").agg(F.avg("x").alias("mu"))
-                .collect())
-        acc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            acc.setdefault((r["sub"], r["cid"]), {})[r["pos"]] = r["mu"]
-        books = [[
-            [pm[p] for p in sorted(pm)]
-            if (pm := acc.get((j, i))) is not None else books[j][i]
-            for i in range(k)] for j in range(m)]
-    return books
-
-
-def pq_encode(vectors: DataFrame, codebooks: list[list[list[float]]],
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              ) -> DataFrame:
-    """Encode: per vector, ``codes`` (array<int>, one per subspace) and
-    ``pq_sqerr`` (total squared reconstruction error = Σ_j min-dist²).
-    Pure literal-fold expressions — no join, no shuffle."""
-    sub_dim = len(codebooks[0][0])
-    # r12: codebooks as broadcast data (_codebooks_data) — the m
-    # literal argmin folds made the encode plan's BUILD the dominant
-    # cost (measured 4.25 -> 2.07 s noop at sf0.1, 16x32).  Identical
-    # fold over element_at(__books, j+1); rows bit-identical.
-    assigned = [argmin_code_expr(F.element_at(F.col("__books"), j + 1),
-                                 subvector(vec_col, j, sub_dim))
-                for j in range(len(codebooks))]
-    codes = F.array(*[a["code"] for a in assigned])
-    sqerr = sum((a["sqerr"] for a in assigned), F.lit(0.0))
-    return _with_books(vectors, codebooks).select(
-        F.col(id_col), codes.alias("codes"), sqerr.alias("pq_sqerr"))
+    return F.broadcast(spark.createDataFrame(
+        data, "__books array<array<struct<code:int,c:array<double>>>>"))
 
 
 def _dist2(a: F.Column, b: F.Column) -> F.Column:
@@ -194,38 +62,166 @@ def _dist2(a: F.Column, b: F.Column) -> F.Column:
                        F.lit(0.0), lambda s, x: s + x)
 
 
+def argmin_code_expr(book: F.Column, sub_col: F.Column) -> F.Column:
+    """struct(code, sqerr): index of the L2-nearest centroid of
+    ``book`` (an ``array<struct<code,c>>`` column) and the squared
+    distance to it — one fold, strict ``<`` keeps the lowest code on
+    ties (deterministic).  named_struct throughout: .alias() on struct
+    fields is dropped inside higher-order-function lambdas, which
+    would type-mismatch the CASE branches."""
+
+    def merge(acc, entry):
+        d2 = _dist2(sub_col, entry["c"])
+        return (F.when(d2 < acc["sqerr"],
+                       F.named_struct(F.lit("code"), entry["code"],
+                                      F.lit("sqerr"), d2))
+                .otherwise(acc))
+
+    init = F.named_struct(F.lit("code"), F.lit(-1),
+                          F.lit("sqerr"), F.lit(float("inf")))
+    return F.aggregate(book, init, merge)
+
+
+def lloyd_train(view: DataFrame, n_groups: int, k: int, n_iter: int,
+                fold: Callable[[F.Column, F.Column], F.Column],
+                ship: Callable[[list[list[float]]], list[list[float]]]
+                = lambda book: book) -> Books:
+    """Centroids-as-data Lloyd's k-means, ``n_groups`` independent
+    codebooks trained jointly — one job per iteration.
+
+    ``view`` holds ``(grp, vid, v array<double>)`` rows with every
+    ``vid`` present once in each group ``0..n_groups-1`` (one group for
+    k-means, the m-subspace explode for PQ).  ``fold(book, v)`` maps a
+    point to its centroid code given its group's shipped codebook
+    (argmax-dot or argmin-L2); ``ship`` transforms each codebook in
+    the driver before it is broadcast (L2-normalise, or identity).
+
+    Deterministic: seeds are the ``k`` vids with the smallest md5(vid)
+    (their rows seed every group), the fold breaks ties on the lowest
+    code, and the update is an exact (grp, code, pos) avg collected
+    straight to the driver, where the centroid arrays are assembled —
+    a second groupBy to build the arrays was a whole extra exchange
+    per iteration (per-iteration 1.00 -> 0.82 s at sf0.1,
+    bench_runs/r12_probes.md).  An empty cluster keeps its centroid.
+    Returns ``n_groups`` codebooks of ``k`` unshipped centroids."""
+    # Persist the view: seeding and every iteration re-read it, and
+    # recomputing means re-scanning (and re-exploding) the corpus per
+    # job.  At 100 TB persist to MEMORY_AND_DISK — still one corpus
+    # scan total instead of n_iter + 1.
+    view = view.persist()
+    try:
+        seeds = (view.orderBy(F.md5(F.col("vid").cast("string")), "vid",
+                              "grp")
+                 .limit(k * n_groups).collect())
+        books = [[list(r["v"]) for r in seeds if r["grp"] == g]
+                 for g in range(n_groups)]
+        book = F.element_at(F.col("__books"), F.col("grp") + 1)
+        for _ in range(n_iter):
+            rel = codebook_relation(view.sparkSession,
+                                    [ship(b) for b in books])
+            # Fold in its own Project: beside posexplode it would sit
+            # above the Generate and run once per vector ELEMENT.
+            rows = (view.crossJoin(rel)
+                    .select("grp", fold(book, F.col("v")).alias("code"), "v")
+                    .select("grp", "code", F.posexplode("v").alias("pos", "x"))
+                    .groupBy("grp", "code", "pos")
+                    .agg(F.avg("x").alias("mu")).collect())
+            acc: dict[tuple[int, int], dict[int, float]] = {}
+            for r in rows:
+                acc.setdefault((r["grp"], r["code"]), {})[r["pos"]] = r["mu"]
+            books = [[
+                [pm[p] for p in sorted(pm)]
+                if (pm := acc.get((g, i))) is not None else c
+                for i, c in enumerate(b)] for g, b in enumerate(books)]
+    finally:
+        view.unpersist()
+    return books
+
+
+def _subspace_view(vectors: DataFrame, m: int, sub_dim: int,
+                   id_col: str, vec_col: str) -> DataFrame:
+    """(grp, vid, v): every vector exploded into its m subvectors, grp
+    = subspace — one scan produces all subspaces' training rows."""
+    arr = F.array(*[
+        F.named_struct(F.lit("grp"), F.lit(j),
+                       F.lit("v"), subvector(vec_col, j, sub_dim))
+        for j in range(m)])
+    return (vectors.select(F.col(id_col).alias("vid"),
+                           F.explode(arr).alias("e"))
+            .select(F.col("e.grp").alias("grp"), "vid",
+                    F.col("e.v").alias("v")))
+
+
+def pq_train(vectors: DataFrame, dim: int, m: int = 8, k: int = 16,
+             n_iter: int = 3, id_col: str = "vec_id",
+             vec_col: str = "embedding") -> Books:
+    """Joint per-subspace codebooks: ``m`` L2 k-means runs fused into
+    one job per Lloyd iteration (``lloyd_train`` over the subspace
+    view, argmin-L2 fold, codebooks shipped as trained).  Seeds are the
+    ``k`` vectors with smallest md5(id), their m slices seeding the m
+    subspaces.  Returns ``m`` codebooks of ``k`` centroids."""
+    assert dim % m == 0, "dim must divide into m equal subspaces"
+    return lloyd_train(_subspace_view(vectors, m, dim // m, id_col, vec_col),
+                       m, k, n_iter,
+                       lambda book, v: argmin_code_expr(book, v)["code"])
+
+
+def _encode(vectors: DataFrame, books: DataFrame, m: int, sub_dim: int,
+            id_col: str, vec_col: str) -> DataFrame:
+    assigned = [argmin_code_expr(F.element_at(F.col("__books"), j + 1),
+                                 subvector(vec_col, j, sub_dim))
+                for j in range(m)]
+    codes = F.array(*[a["code"] for a in assigned])
+    sqerr = sum((a["sqerr"] for a in assigned), F.lit(0.0))
+    return vectors.crossJoin(books).select(
+        F.col(id_col), codes.alias("codes"), sqerr.alias("pq_sqerr"))
+
+
+def pq_encode(vectors: DataFrame, codebooks: Books,
+              id_col: str = "vec_id", vec_col: str = "embedding",
+              ) -> DataFrame:
+    """Encode: per vector, ``codes`` (array<int>, one per subspace) and
+    ``pq_sqerr`` (total squared reconstruction error = Σ_j min-dist²).
+    One argmin fold per subspace over the broadcast codebook row — a
+    narrow map stage, no shuffle, no Python."""
+    return _encode(vectors,
+                   codebook_relation(vectors.sparkSession, codebooks),
+                   len(codebooks), len(codebooks[0][0]), id_col, vec_col)
+
+
 def pq_adc_topk(vectors: DataFrame, queries: DataFrame,
-                codebooks: list[list[list[float]]], k: int = 10,
+                codebooks: Books, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 ) -> DataFrame:
     """Asymmetric distance computation (ADC) top-k: the query stays
     exact, candidates are their PQ codes.  Per query row, a distance
     TABLE per subspace (k2 entries: query-subvector → each centroid) is
-    computed once as a literal-codebook fold; per candidate the
+    computed once against the broadcast codebook row; per candidate the
     approximate L2² is then just m table lookups and adds — no float
     vectors are read on the candidate side at all.
 
     At 100 TB this is THE reason PQ exists: the scan touches m bytes
     per vector (codes) instead of 4·d, and the per-candidate cost is m
     array-index adds inside codegen.  Queries (with their tables,
-    m·k2 doubles each) broadcast."""
+    m·k2 doubles each) broadcast.  One codebook relation serves both
+    the query tables and the candidate encode."""
     from pyspark.sql import Window
     sub_dim = len(codebooks[0][0])
     m = len(codebooks)
+    books = codebook_relation(vectors.sparkSession, codebooks)
 
     def table(j: int) -> F.Column:
         # closure, NOT a default-arg lambda: transform() treats a
         # two-parameter lambda as (element, index) and would rebind j
-        # to the array index.  r12: the codebook comes from the 1-row
-        # broadcast relation (_codebooks_data), not m*k literals.
+        # to the array index.
         sv = subvector(vec_col, j, sub_dim)
         return F.transform(F.element_at(F.col("__books"), j + 1),
                            lambda e: _dist2(sv, e["c"]))
 
     tables = F.array(*[table(j) for j in range(m)])
-    q = _with_books(queries, codebooks).select(
+    q = queries.crossJoin(books).select(
         F.col(id_col).alias("query_id"), tables.alias("tabs"))
-    c = pq_encode(vectors, codebooks, id_col, vec_col).select(
+    c = _encode(vectors, books, m, sub_dim, id_col, vec_col).select(
         F.col(id_col).alias("cand_id"), "codes")
     adc = F.aggregate(
         F.zip_with("tabs", "codes",

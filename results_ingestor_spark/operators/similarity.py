@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from results_ingestor_spark.functions.vector import cosine_similarity
+from results_ingestor_spark.operators.quantization import (
+    codebook_relation, lloyd_train)
 
 N_PLANES = 16
 _PLANE_MOD = 2001  # component ∈ [-1, 1] in steps of 1e-3
@@ -163,162 +165,88 @@ def _l2_normalized(centroids: list[list[float]]) -> list[list[float]]:
     return normed
 
 
-def _argmax_fold(cent_arr: F.Column, vec_col: str) -> F.Column:
-    """Argmax-dot fold over an ``array<struct<cid,c>>`` column of
+def _argmax_fold(book: F.Column, vec: F.Column) -> F.Column:
+    """Argmax-dot fold over an ``array<struct<code,c>>`` codebook of
     L2-normalized centroids, keeping the best dot product.  dot(v,
     c/|c|) ranks identically to cosine for a fixed v, so no per-row
-    norm is needed; strict ``>`` with ascending-cid array order keeps
-    the lowest centroid id on ties (deterministic).  The SAME fold
-    serves both the literal-array and broadcast-column paths, so their
-    results are bit-identical by construction."""
+    norm is needed; strict ``>`` with ascending-code array order keeps
+    the lowest centroid id on ties (deterministic).  named_struct, as
+    in ``quantization.argmin_code_expr``: .alias() on struct fields is
+    dropped inside higher-order-function lambdas."""
 
     def merge(acc, cs):
         dot = F.aggregate(
-            F.zip_with(F.col(vec_col), cs["c"],
-                       lambda a, b: a.cast("double") * b),
+            F.zip_with(vec, cs["c"], lambda a, b: a.cast("double") * b),
             F.lit(0.0), lambda s, x: s + x)
         return (F.when(dot > acc["s"],
-                       F.struct(cs["cid"].alias("cid"), dot.alias("s")))
+                       F.named_struct(F.lit("code"), cs["code"],
+                                      F.lit("s"), dot))
                 .otherwise(acc))
 
-    init = F.struct(F.lit(-1).alias("cid"),
-                    F.lit(float("-inf")).alias("s"))
-    return F.aggregate(cent_arr, init, merge)["cid"]
+    init = F.named_struct(F.lit("code"), F.lit(-1),
+                          F.lit("s"), F.lit(float("-inf")))
+    return F.aggregate(book, init, merge)["code"]
 
 
 def assign_centroid_expr(centroids: list[list[float]], vec_col: str) -> F.Column:
     """Argmax-cosine centroid assignment as ONE JVM expression with the
     centroid matrix folded as PLAN LITERALS — zero joins, zero extra
-    operators.  Right for small FIXED k (IVF coarse quantizers, PQ
-    codebooks); for corpus-derived k (the SemDeDup k=isqrt(n) contract)
-    use ``assign_centroids``, which keeps the plan O(1) in k (VERDICT
-    r6 item 4: at 100 TB, k≈10⁴-10⁵ literal vectors make the expression
+    operators.  Right for small FIXED k (the IVF coarse quantizers);
+    for corpus-derived k (the SemDeDup k=isqrt(n) contract) use
+    ``assign_centroids``, which keeps the plan O(1) in k (VERDICT r6
+    item 4: at 100 TB, k≈10⁴-10⁵ literal vectors make the expression
     tree itself the bottleneck)."""
-    normed = _l2_normalized(centroids)
-    cent_arr = F.array(*[
-        F.struct(F.lit(i).alias("cid"),
+    book = F.array(*[
+        F.struct(F.lit(i).alias("code"),
                  F.array(*[F.lit(x) for x in c]).alias("c"))
-        for i, c in enumerate(normed)])
-    return _argmax_fold(cent_arr, vec_col)
-
-
-# The LARGEST k that folds as plan literals (no extra operator,
-# constant-folded); k above it rides a broadcast relation as DATA.
-# assign_centroids takes the literal path for len(centroids) <=
-# this value — the name and the comparison agree (a review caught
-# them off-by-one: `< threshold` with a `_MAX_K` name put k == 64 on
-# the data path).  63 × dim doubles is well under any plan-size
-# concern, while k=isqrt(n) crosses it at n ≈ 4096 vectors — far
-# below any corpus this engine targets, so corpus-derived k always
-# takes the data path.
-ASSIGN_LITERAL_MAX_K = 63
+        for i, c in enumerate(_l2_normalized(centroids))])
+    return _argmax_fold(book, F.col(vec_col))
 
 
 def assign_centroids(df: DataFrame, centroids: list[list[float]],
-                     vec_col: str, out_col: str = "cid",
-                     threshold: int = ASSIGN_LITERAL_MAX_K) -> DataFrame:
-    """Add ``out_col`` = argmax-cosine centroid id, choosing the scale-
-    correct strategy by k (VERDICT r6 item 4):
-
-    * k <= ``threshold``: the literal fold (``assign_centroid_expr``)
-      — plan text grows with k, but for small fixed k that is cheaper
-      than any join.
-    * k > ``threshold``: the centroid matrix ships as a **single-row
-      broadcast LocalRelation** (data on the broadcast wire, exactly
-      how MLlib broadcasts its centroid matrix — NOT expression-tree
-      literals) cross-joined onto the input, and the SAME fold runs
-      over the broadcast COLUMN.  Plan size is O(1) in k; no row
-      explosion, no aggregation, no shuffle — a BroadcastNestedLoopJoin
-      against one row is a per-partition map (whitelisted shape in
-      tools/plan_lint.py: 1-row build side).
-
-    Both paths evaluate the identical fold over identically-normalized
-    centroids, so results are cell-for-cell equal by construction
-    (pinned in tests/test_similarity.py)."""
-    if len(centroids) <= threshold:
-        return df.withColumn(out_col,
-                             assign_centroid_expr(centroids, vec_col))
-    spark = df.sparkSession
-    normed = _l2_normalized(centroids)
-    cents_df = spark.createDataFrame(
-        [([(i, c) for i, c in enumerate(normed)],)],
-        "__cents array<struct<cid:int,c:array<double>>>")
-    return (df.crossJoin(F.broadcast(cents_df))
-            .withColumn(out_col, _argmax_fold(F.col("__cents"), vec_col))
-            .drop("__cents"))
+                     vec_col: str, out_col: str = "cid") -> DataFrame:
+    """Add ``out_col`` = argmax-cosine centroid id, with the normalized
+    centroid matrix on the one-row broadcast codebook relation
+    (``quantization.codebook_relation``: data on the broadcast wire,
+    exactly how MLlib broadcasts its centroid matrix — NOT
+    expression-tree literals) cross-joined onto the input.  Plan size
+    is O(1) in k; no row explosion, no aggregation, no shuffle — a
+    BroadcastNestedLoopJoin against one row is a per-partition map
+    (whitelisted shape in tools/plan_lint.py: 1-row build side).  The
+    fold is ``assign_centroid_expr``'s, so both give cell-for-cell the
+    same ids (pinned in tests/test_similarity.py)."""
+    books = codebook_relation(df.sparkSession, [_l2_normalized(centroids)])
+    return (df.crossJoin(books)
+            .withColumn(out_col, _argmax_fold(
+                F.element_at(F.col("__books"), 1), F.col(vec_col)))
+            .drop("__books"))
 
 
 def kmeans_centroids(vectors: DataFrame, n_clusters: int = 10,
                      n_iter: int = 3, id_col: str = "vec_id",
                      vec_col: str = "embedding") -> list[list[float]]:
     """Lloyd's k-means over DataFrame ops — the label-free IVF coarse
-    quantizer.  Deterministic end-to-end: seeds are the ``n_clusters``
-    vectors with the smallest md5(id) (a pseudo-random spread with no RNG
-    state), assignment ties break on the lowest centroid id, and mean
+    quantizer: ``quantization.lloyd_train`` with one group, the
+    argmax-dot fold, and centroids L2-normalized before each broadcast.
+    Deterministic end-to-end: seeds are the ``n_clusters`` vectors with
+    the smallest md5(id) (a pseudo-random spread with no RNG state),
+    assignment ties break on the lowest centroid id, and mean
     recomputation is exact groupBy-avg.
 
     Scale shape: each iteration is one narrow map stage (assignment is a
-    single fold over the centroid matrix — plan literals for small k, a
-    1-row broadcast relation for corpus-derived k; either way no shuffle
-    of the vectors) plus one (cid, pos) aggregation whose output is k x
-    dim doubles.  Only the centroids (k x dim) ever reach the driver, same as
-    Spark MLlib's own KMeans; an empty cluster keeps its previous
-    centroid."""
-    # Persist the projected view: seeding + every Lloyd iteration is its
-    # own job, and without this each one re-scans (and, for derived
-    # inputs, re-shuffles) the corpus — n_iter+1 scans instead of one.
-    # Same persist/unpersist contract as the PQ trainer
-    # (operators/quantization.py); at 100 TB use MEMORY_AND_DISK.
-    v = vectors.select(F.col(id_col).alias("vid"),
-                       F.col(vec_col).cast("array<double>").alias("v")
-                       ).persist()
-    try:
-        seeds = (v.orderBy(F.md5(F.col("vid").cast("string")), "vid")
-                 .limit(n_clusters).collect())
-        cents = [list(r["v"]) for r in seeds]
-        for _ in range(n_iter):
-            # ALWAYS the broadcast-data fold inside the trainer
-            # (threshold=0), even for k <= ASSIGN_LITERAL_MAX_K: the
-            # centroids CHANGE every Lloyd iteration, so the literal
-            # path re-builds a k x dim expression tree (thousands of
-            # py4j F.lit round-trips at plan-build time) and generates
-            # new codegen source per iteration — a fresh Janino compile
-            # each time.  The broadcast path ships centroids as DATA,
-            # so every iteration reuses the identical generated class
-            # (codegen cache hit) and the plan is O(1) in k.  Results
-            # are bit-identical by construction — both paths evaluate
-            # the same fold over identically-normalized centroids
-            # (pinned in tests/test_similarity.py).  Measured r11:
-            # 2-iter isqrt(n) training at sf0.1 drops ~2.5x wall-clock;
-            # the win is plan-build + compile overhead, which at 100 TB
-            # is the same per-iteration driver tax.
-            assigned = assign_centroids(v.select("v"), cents, "v", "cid",
-                                        threshold=0)
-            # r12 (VERDICT r11 item 6): collect the (cid, pos, mean)
-            # rows straight from the FIRST aggregation and assemble the
-            # centroid arrays in the driver.  The former second
-            # groupBy(cid) (collect_list + array_sort + transform) was
-            # a whole extra exchange+aggregate stage per iteration just
-            # to move k*dim doubles into k arrays — work the driver does
-            # in microseconds on ~k*dim rows.  Same avg rows, identical
-            # centroids (A/B-asserted in tools/probe_lloyd_r12.py);
-            # measured per-iteration 1.00 -> 0.82 s at sf0.1.  At scale
-            # the collect stays k*dim-sized — centroid-sized, exactly
-            # what MLlib's trainer collects.
-            rows = (assigned.select("cid",
-                                    F.posexplode("v").alias("pos", "x"))
-                    .groupBy("cid", "pos").agg(F.avg("x").alias("m"))
-                    .collect())
-            by_cid: dict[int, dict[int, float]] = {}
-            for r in rows:
-                by_cid.setdefault(r["cid"], {})[r["pos"]] = r["m"]
-            cents = [
-                [pm[p] for p in sorted(pm)]
-                if (pm := by_cid.get(i)) is not None else cents[i]
-                for i in range(n_clusters)]
-    finally:
-        v.unpersist()
-    return cents
+    single fold over the broadcast centroid row — no shuffle of the
+    vectors) plus one (code, pos) aggregation whose output is k x dim
+    doubles.  Only the centroids (k x dim) ever reach the driver, same
+    as Spark MLlib's own KMeans; an empty cluster keeps its previous
+    centroid.  The broadcast row, not a literal fold, even for small
+    k: the centroids change every iteration, so literals would rebuild
+    a k x dim expression tree and compile fresh codegen per iteration
+    (r11: 2-iteration isqrt(n) training at sf0.1 ran ~2.5x faster on
+    the data path)."""
+    view = vectors.select(F.lit(0).alias("grp"), F.col(id_col).alias("vid"),
+                          F.col(vec_col).cast("array<double>").alias("v"))
+    return lloyd_train(view, 1, n_clusters, n_iter, _argmax_fold,
+                       _l2_normalized)[0]
 
 
 def ivf_topk_kmeans(vectors: DataFrame, queries: DataFrame, k: int = 10,

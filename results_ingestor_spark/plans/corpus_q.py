@@ -488,7 +488,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e.coalesce(max(8, n // 250))
     cents = kmeans_centroids(e, n_clusters=k, n_iter=2)
     # Materialize the assignment ONCE (CheckpointScope lifecycle): the
-    # k x dim literal-fold is the entry's most expensive expression and
+    # k x dim fold is the entry's most expensive expression and
     # three consumers (both pair-join sides + the per-cluster census)
     # would otherwise each recompute it over the full corpus.  The
     # vector-sized checkpoint is released before returning; only the
@@ -496,17 +496,12 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assign_centroids: k here is CORPUS-DERIVED (isqrt(n)), so the
     # centroid matrix rides a broadcast relation as data, keeping the
     # plan O(1) in k — at 100 TB, k≈10⁴-10⁵ literal vectors would make
-    # the expression tree itself the bottleneck (VERDICT r6 item 4).
+    # the expression tree itself the bottleneck (VERDICT r6 item 4) —
+    # and the fold reuses the class the trainer just compiled.
     from results_ingestor_spark.operators.ckpt import CheckpointScope
     scope = CheckpointScope(e)
-    # threshold=0: the final assignment rides the broadcast-data fold
-    # too (r11) — at bench k=isqrt(n) the literal path costs thousands
-    # of plan-build py4j literals + a one-off codegen compile, while
-    # the data path reuses the class the trainer just compiled.  Same
-    # fold, bit-identical output (tests/test_similarity.py).
     assigned = scope.checkpoint(assign_centroids(
-        e.select("vec_id", "embedding"), cents, "embedding", "cid",
-        threshold=0))
+        e.select("vec_id", "embedding"), cents, "embedding", "cid"))
     a = assigned.select(F.col("cid"), F.col("vec_id").alias("id_a"),
                         F.col("embedding").alias("va"))
     b = assigned.select(F.col("cid"), F.col("vec_id").alias("id_b"),

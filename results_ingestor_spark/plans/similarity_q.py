@@ -280,7 +280,8 @@ def embedding_pq_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline.  float32→codes compression is 32x.
 
     Scale: training traffic is m·k·(dim/m) doubles to the driver;
-    encoding is a literal-fold map stage (operators/quantization.py) —
+    encoding is a map stage over the broadcast codebook row
+    (operators/quantization.py) —
     the 100 TB corpus is touched in full exactly once per Lloyd
     iteration and once to encode."""
     from results_ingestor_spark.operators.quantization import (

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from results_ingestor_spark.operators.ckpt import (
     CheckpointScope, release_result)
 
@@ -195,3 +197,21 @@ def test_checkpoint_mode_defaults_to_local(spark, monkeypatch):
             getattr(spark.sparkContext._jsc.sc(),
                     "checkpointDir_$eq")(none_opt)
             assert use_reliable_checkpoints(spark) is False
+
+
+def test_reliable_env_without_checkpoint_dir_is_rejected(spark, monkeypatch):
+    # A half-set configuration — reliable checkpoints requested, no
+    # checkpoint dir — fails at scope creation with an error naming
+    # both knobs, not at the first checkpoint with Spark's "Checkpoint
+    # directory has not been set".
+    from results_ingestor_spark.operators.ckpt import (
+        use_reliable_checkpoints)
+
+    assert not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CKPT", "1")
+    with pytest.raises(ValueError, match="setCheckpointDir"):
+        use_reliable_checkpoints(spark)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_RELIABLE_CKPT"):
+        CheckpointScope(spark)
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CKPT", "0")
+    assert use_reliable_checkpoints(spark) is False

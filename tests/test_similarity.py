@@ -216,19 +216,18 @@ def test_maxsim_numpy_model_and_bounds(spark):
 
 
 def test_assign_centroids_paths_identical(spark, emb):
-    """The broadcast-data argmax (corpus-derived k; VERDICT r6 item 4)
-    must produce cell-for-cell the same assignment as the literal fold
-    — both paths evaluate the identical _argmax_fold over identically
-    normalized centroids, so any divergence is a construction bug."""
+    """The broadcast-data argmax (assign_centroids; corpus-derived k,
+    VERDICT r6 item 4) must produce cell-for-cell the same assignment
+    as the literal fold (assign_centroid_expr; fixed small k) — both
+    evaluate the identical _argmax_fold over identically normalized
+    centroids, so any divergence is a construction bug."""
     from results_ingestor_spark.operators.similarity import (
-        assign_centroids, kmeans_centroids)
+        assign_centroid_expr, assign_centroids, kmeans_centroids)
 
     e = emb.select("vec_id", "embedding").limit(400)
     cents = kmeans_centroids(e, n_clusters=8, n_iter=2)
-    lit = assign_centroids(e, cents, "embedding", "cid",
-                           threshold=10**9)     # force literal path
-    dat = assign_centroids(e, cents, "embedding", "cid",
-                           threshold=0)         # force broadcast path
+    lit = e.withColumn("cid", assign_centroid_expr(cents, "embedding"))
+    dat = assign_centroids(e, cents, "embedding", "cid")
     got_lit = sorted((r["vec_id"], r["cid"]) for r in lit.collect())
     got_dat = sorted((r["vec_id"], r["cid"]) for r in dat.collect())
     assert got_lit == got_dat
@@ -249,7 +248,7 @@ def test_assign_centroids_plan_size_constant_in_k(spark, emb):
     mk = lambda k: [[float(i + j) for j in range(dim)] for i in range(k)]
 
     def plan_len(k):
-        df = assign_centroids(e, mk(k), "embedding", "cid", threshold=0)
+        df = assign_centroids(e, mk(k), "embedding", "cid")
         return len(df._jdf.queryExecution().executedPlan().toString()), df
 
     n80, df80 = plan_len(80)

@@ -164,7 +164,8 @@ WHITELIST_BNLJ = {
     "sketch_theta_set_ops": "1-row sketch-algebra combine",
     "dq_referential_integrity": "1-row count combines per FK audit",
     "text_pmi_cooccurrence": "1-row doc-count broadcast",
-    "embedding_pq_compression": "codebook-literal encode + 1-row MSE combine",
+    "embedding_pq_compression": "1-row broadcast codebook encode + 1-row "
+        "MSE combine",
     "graph_triangle_count": "1-row triangle/wedge ratio combine",
     "graph_pagerank_top20": "1-row node-count broadcast per iteration",
     "dsir_importance_weights": "1-row gram-total broadcast",
