@@ -5,34 +5,39 @@ file in the staging dir with ``na_values='Not Found'``, and unions by
 column name (pandas concat aligns columns, filling missing with NaN).
 
 Spark realization:
-* Sniffing stays driver-side (Spark's CSV reader needs ``sep`` up
-  front) but reads ONE line per file — O(#files), not O(data).
-* Files sharing a delimiter are read in a single ``spark.read.csv``
-  call (one distributed scan per delimiter group, not per file).
+* The driver reads ONE line per file (``resolver.csv_header``): the
+  sniffed delimiter and the column names, named by Spark's own header
+  rule — O(#files), not O(data).
+* Files sharing a delimiter AND a header are read in a single
+  ``spark.read.csv`` call (one distributed scan per group, not per
+  file).  Spark applies one header to every file of a call by position,
+  so grouping by header is what keeps each file's columns aligned.
+* The untyped read (``infer_schema=False``) hands the reader an
+  all-string schema built from those names, so building it runs no
+  Spark job; Spark would otherwise run one to re-read the header line.
 * The cross-file union is ``unionByName(allowMissingColumns=True)`` —
   a zero-shuffle plan node; Spark concatenates partitions lazily.
 
-At 100 TB the per-file sniff is the only sequential step; it touches
-~one 4 KiB block per file and can be parallelized driver-side with a
-thread pool if file counts reach millions.
+At 100 TB the per-file header read is the only sequential step; it
+touches ~one 4 KiB block per file and can be parallelized driver-side
+with a thread pool if file counts reach millions.
 """
 
 from __future__ import annotations
 
-import csv
 import glob
 import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
+
+from results_ingestor_spark.sources.resolver import (csv_header,
+                                                     sniff_delimiter)
+
+__all__ = ["NULL_SENTINEL", "read_result_files", "sniff_delimiter"]
 
 NULL_SENTINEL = "Not Found"  # ingestor_precinct.py:112
-
-
-def sniff_delimiter(path: str) -> str:
-    """csv.Sniffer on the first line — parity with ingestor_precinct.py:27-31."""
-    with open(path, newline="") as f:
-        return csv.Sniffer().sniff(f.readline()).delimiter
 
 
 def read_result_files(spark: SparkSession, paths: list[str] | str,
@@ -60,15 +65,21 @@ def read_result_files(spark: SparkSession, paths: list[str] | str,
     if not files:
         raise ValueError(f"no input files under {paths!r}")
 
-    by_sep: dict[str, list[str]] = {}
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    groups: dict[tuple[str, tuple[str, ...]], list[str]] = {}
     for f in files:
-        by_sep.setdefault(sniff_delimiter(f), []).append(f)
+        groups.setdefault(
+            csv_header(f, header, NULL_SENTINEL, case_sensitive), []
+        ).append(f)
 
-    frames = [
-        spark.read.options(header=str(header).lower(), sep=sep,
-                           nullValue=NULL_SENTINEL,
-                           inferSchema=str(infer_schema).lower())
-        .csv(group)
-        for sep, group in sorted(by_sep.items())
-    ]
+    frames = []
+    for (sep, names), group in sorted(groups.items()):
+        reader = spark.read.options(header=str(header).lower(), sep=sep,
+                                    nullValue=NULL_SENTINEL)
+        if infer_schema:
+            reader = reader.option("inferSchema", "true")
+        else:
+            reader = reader.schema(StructType(
+                [StructField(n, StringType()) for n in names]))
+        frames.append(reader.csv(group))
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)

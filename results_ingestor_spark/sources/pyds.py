@@ -16,8 +16,8 @@ first-class source instead of driver-side glue:
 All columns surface as strings (the reference reads raw frames and maps/
 casts downstream — operators/mapping.py, operators/align.py).  The
 equivalent built-in-reader path is sources/csv_source.py; this source
-exists for the many-small-files regime where per-delimiter grouped scans
-and a driver-side unionByName fold stop being convenient.
+exists for the many-small-files regime where per-(delimiter, header)
+grouped scans and a driver-side unionByName fold stop being convenient.
 """
 
 from __future__ import annotations

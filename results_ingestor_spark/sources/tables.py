@@ -12,6 +12,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from results_ingestor_spark.session import tune_session
+from results_ingestor_spark.sources.resolver import parquet_schema
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -21,18 +22,25 @@ TABLE_NAMES = (
 
 # (applicationId, abs sf_dir, table) → DataFrame.  The corpus is
 # read-only and DataFrames are immutable plan handles, so reusing them
-# skips the per-query-build file listing + footer schema read — a
-# measured ~0.3-0.5 s of driver time per registered-query construction.
+# skips the per-query-build file listing + footer schema read.  Only the
+# running application's entries are kept: a miss evicts the handles of
+# stopped applications, which could never be used again.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     """Load the synthetic tables as lazy DataFrames (memoized per
-    session + directory).
+    application + directory).
 
-    Also pins runtime confs (UTC session timezone, AQE) on the session —
-    the driver hands us an externally-created one.
+    Each table is opened with an explicit schema read from its parquet
+    footer on the driver (``resolver.parquet_schema``), so loading runs
+    no Spark job; ``spark.read.parquet`` alone would run one per table
+    to infer it.
+
+    Also pins runtime confs (UTC session timezone, AQE, parquet
+    ``nanosAsLong``) on the session first — the driver hands us an
+    externally-created one, and the footer conversion reads those confs.
     """
     tune_session(spark)
     app = spark.sparkContext.applicationId
@@ -42,7 +50,10 @@ def load_tables(spark: SparkSession, sf_dir: str,
         key = (app, base, n)
         df = _TABLE_CACHE.get(key)
         if df is None:
-            df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
+            for stale in [k for k in _TABLE_CACHE if k[0] != app]:
+                del _TABLE_CACHE[stale]
+            path = os.path.join(sf_dir, f"{n}.parquet")
+            df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
             if n == "events":
                 df = _normalize_events(df)
             _TABLE_CACHE[key] = df

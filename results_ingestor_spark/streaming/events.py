@@ -30,17 +30,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from results_ingestor_spark.sources.resolver import parquet_schema
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events parquet.  The schema comes from
-    a batch read (streams need it up front); the nanosecond ts column is
-    normalized to a microsecond timestamp exactly like the batch path."""
+    the file's footer (streams need it up front); the nanosecond ts
+    column is normalized to a microsecond timestamp exactly like the
+    batch path."""
     from results_ingestor_spark.session import tune_session
     from results_ingestor_spark.sources.tables import _normalize_events
     tune_session(spark)
     reader = (spark.readStream
-              .schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
+              .schema(parquet_schema(spark, f"{sf_dir}/events.parquet"))
               # FileStreamSource requires a directory; glob-filter to the
               # events file within it
               .option("pathGlobFilter", "events.parquet"))
@@ -416,7 +419,7 @@ def replay_multibatch_hourly(spark: SparkSession, sf_dir: str,
             # making batch order — and therefore watermark progression —
             # deterministic run-to-run.
             os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-        schema = spark.read.parquet(os.path.join(stream_dir, "f0.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(stream_dir, "f0.parquet"))
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", "1").parquet(stream_dir))
         agg = (stream
@@ -516,8 +519,7 @@ def crash_recovery_replay_hourly(spark: SparkSession, sf_dir: str,
             dst = os.path.join(dst_root, f"f{i}.parquet")
             shutil.copy(part, dst)
             os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-        schema = spark.read.parquet(
-            os.path.join(stream_dir, "f0.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(stream_dir, "f0.parquet"))
 
         def start(trigger_kwargs):
             stream = (spark.readStream.schema(schema)
