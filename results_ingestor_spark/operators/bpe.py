@@ -18,9 +18,13 @@ text-pipeline family (token counting: SURVEY §2 extensions).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from results_ingestor_spark.operators.ckpt import CheckpointScope
 
 END = "</w>"
 
@@ -63,22 +67,36 @@ def _merge_fold(left: str, right: str,
     return F.aggregate(src, empty, step)
 
 
-def train_bpe_merges(docs: DataFrame, n_merges: int = 8,
-                     text_col: str = "text") -> DataFrame:
-    """Learn the first ``n_merges`` BPE merges from a document corpus.
+def _pair_counts(words: DataFrame) -> DataFrame:
+    """(a, b, c): each adjacent symbol pair's corpus count."""
+    n = F.size("symbols")
+    return (words.select(
+        "cnt",
+        F.explode(F.arrays_zip(
+            F.slice("symbols", 1, n - 1).alias("a"),
+            F.slice("symbols", 2, n - 1).alias("b"))).alias("p"))
+        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .agg(F.sum("cnt").alias("c")))
 
-    Returns a small DataFrame (merge_rank, left, right, merged,
-    pair_count), deterministic under the (count DESC, left ASC,
-    right ASC) tie-break.
-    """
-    from results_ingestor_spark.operators.ckpt import CheckpointScope
 
-    spark = docs.sparkSession
-    # Storage lifecycle (operators/ckpt.py): the merge result is a
-    # driver-side list, so every vocab-sized checkpoint is releasable —
-    # superseded ones as soon as their successor's blocks exist (the
-    # next merge's .first() materializes the lazy checkpoint, so the
-    # parent release is delayed one iteration), all of them at return.
+def greedy_merges(docs: DataFrame, n_merges: int, text_col: str,
+                  pick: Callable[[DataFrame], Row | None],
+                  extra: Callable[[Row], tuple] = lambda top: (),
+                  ) -> list[tuple]:
+    """The greedy merge trainer shared by BPE and WordPiece: up to
+    ``n_merges`` times, ``pick(words)`` selects the next pair from the
+    ``(symbols, cnt)`` word vocabulary as one driver-side Row with
+    fields a, b, c (None when no pair is left) and every word is
+    rewritten with that merge.  Returns the merges as rows
+    (merge_rank, left, right, merged, pair_count, *extra(top)).
+
+    Storage lifecycle (operators/ckpt.py): the result is driver-side,
+    so every vocab-sized checkpoint is releasable.  The per-merge
+    checkpoint is LAZY — lineage still truncates at first compute, but
+    no extra materialization job per merge (~30% faster at sf0.1 with
+    identical results) — so its parent can only be released once the
+    next ``pick`` has materialized it, one merge later; that is why
+    this loop is not ``CheckpointScope.iterate``."""
     scope = CheckpointScope(docs)
     words = (docs
              .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
@@ -88,38 +106,40 @@ def train_bpe_merges(docs: DataFrame, n_merges: int = 8,
     words = scope.checkpoint(words)  # vocab-sized, truncates lineage
     pending_release = None  # parent awaiting its successor's first compute
 
-    merges: list[tuple[int, str, str, str, int]] = []
+    merges: list[tuple] = []
     for rank in range(n_merges):
-        n = F.size("symbols")
-        pairs = words.select(
-            "cnt",
-            F.explode(F.arrays_zip(
-                F.slice("symbols", 1, n - 1).alias("a"),
-                F.slice("symbols", 2, n - 1).alias("b"))).alias("p"))
-        counts = (pairs
-                  .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                  .agg(F.sum("cnt").alias("c")))
-        top = (counts
-               .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))
-               .first())  # single-row driver collect, centroid-sized
-        # that .first() materialized the current `words` checkpoint, so
+        top = pick(words)  # single-row driver collect, centroid-sized
+        # that collect materialized the current `words` checkpoint, so
         # its parent's blocks are no longer reachable from anything live
         if pending_release is not None:
             scope.release(pending_release)
         if top is None:
             break
         merges.append((rank, top["a"], top["b"], top["a"] + top["b"],
-                       int(top["c"])))
-        # lazy checkpoint: lineage still truncates at first compute,
-        # but no extra materialization job per merge (~30% faster at
-        # sf0.1 with identical results)
+                       int(top["c"])) + extra(top))
         new_words = scope.checkpoint(
             words.withColumn("symbols", _merge_fold(top["a"], top["b"])),
             eager=False)
         pending_release = words
         words = new_words
     scope.release_all_except()  # result is driver-side: release everything
-    return spark.createDataFrame(merges, MERGE_SCHEMA)
+    return merges
+
+
+def train_bpe_merges(docs: DataFrame, n_merges: int = 8,
+                     text_col: str = "text") -> DataFrame:
+    """Learn the first ``n_merges`` BPE merges from a document corpus.
+
+    Returns a small DataFrame (merge_rank, left, right, merged,
+    pair_count), deterministic under the (count DESC, left ASC,
+    right ASC) tie-break.
+    """
+    def most_frequent(words: DataFrame) -> Row | None:
+        return (_pair_counts(words)
+                .orderBy(F.desc("c"), F.asc("a"), F.asc("b")).first())
+
+    return docs.sparkSession.createDataFrame(
+        greedy_merges(docs, n_merges, text_col, most_frequent), MERGE_SCHEMA)
 
 
 def tokenize_with_merges(docs: DataFrame, merges: list[tuple[str, str]],

@@ -22,6 +22,13 @@ an unpersisted block cannot be recomputed (Spark raises
 CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — which is why the scope only ever
 releases frames the operator has explicitly superseded.
 
+``CheckpointScope.iterate`` is the one loop that applies this policy to
+an iteration: each round's state is eagerly checkpointed and the state
+it supersedes released at once, with an optional exact early exit.
+LPA, k-core, connected components and shortest paths run on it; the
+tokenizer trainers keep their own loop because their checkpoint is lazy
+and its parent can only be released one round later.
+
 Cleanup must never fail a query: the py4j surface
 (``JavaSparkContext.getPersistentRDDs``) is wrapped defensively and any
 cleanup error is swallowed — the worst case is the old behavior (blocks
@@ -31,6 +38,7 @@ linger until JVM GC).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -140,6 +148,29 @@ class CheckpointScope:
             owned = set()
         self._owned.append((out, owned))
         return out
+
+    def iterate(self, state: DataFrame,
+                step: Callable[[DataFrame], DataFrame], rounds: int,
+                signature: Callable[[DataFrame], Any] | None = None,
+                ) -> DataFrame:
+        """Run ``rounds`` rounds of ``state = checkpoint(step(state))``,
+        releasing each superseded state as soon as its successor's
+        blocks exist.  With ``signature``, stop after the first round
+        that leaves ``signature(state)`` unchanged; the caller states
+        why an unchanged signature means every later round is a no-op,
+        so the early exit returns exactly the ``rounds``-round state.
+        ``state`` should already be checkpointed through this scope
+        (releasing a frame the scope does not own is a no-op)."""
+        sig = None if signature is None else signature(state)
+        for _ in range(rounds):
+            new = self.checkpoint(step(state))
+            self.release(state)
+            state = new
+            if signature is not None:
+                prev, sig = sig, signature(state)
+                if sig == prev:
+                    break
+        return state
 
     def _release_ids(self, ids: set[int]) -> None:
         try:

@@ -25,7 +25,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from results_ingestor_spark.operators.ckpt import CheckpointScope
@@ -134,11 +134,8 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     # 13.2 s, with 5×→10× scaling turning near-flat — the standard
     # Pregel shape (graph partitioned once at build, degrees computed
     # once).
-    # Storage lifecycle (operators/ckpt.py): the edge-list-sized
-    # checkpoints are RELEASED before returning — only the |V|-row rank
-    # table stays persisted.  Without this, every call pinned two full
-    # edge-list copies until JVM GC (measured: +2 persistent RDDs per
-    # call, 10 after five calls).
+    # The edge-list-sized checkpoints are released before returning —
+    # only the |V|-row rank table stays persisted (operators/ckpt.py).
     scope = CheckpointScope(edges)
     sym = scope.checkpoint(
         symmetrize(edges).repartition("u").sortWithinPartitions("u"))
@@ -169,27 +166,23 @@ def lpa_communities(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     deterministic, so the unrolled-SQL oracle can replay it exactly.
     Scale: each round is one (edge ⋈ label) shuffle keyed on node id
     and one per-node argmax — the same budget as a PageRank step;
-    localCheckpoint truncates the growing lineage, and the edge list
-    is checkpointed once so rounds don't re-derive the co-purchase
-    self-join (see pagerank).
+    each round's labeling is checkpointed (``CheckpointScope.iterate``)
+    and the edge list is checkpointed once so rounds don't re-derive
+    the co-purchase self-join (see pagerank).
     """
-    from pyspark.sql import functions as F
     # Key-partitioned + sorted checkpoint, like pagerank: each round's
     # label join consumes the edge list in place instead of
     # re-exchanging/re-sorting 2|E| rows (measured 35.6→30.4 s on the
     # 12M-edge 10× corpus — a smaller win than pagerank's because LPA's
     # per-round cost is dominated by the unavoidable (u,label) message
     # aggregation, which IS the algorithm).
-    # Storage lifecycle (operators/ckpt.py): each round's label
-    # checkpoint supersedes the previous one, which is released
-    # immediately; the edge list is released before returning.  Only
-    # the final |V|-row labeling stays persisted.
     scope = CheckpointScope(edges)
     sym = scope.checkpoint(symmetrize(edges).select("u", "v")
                            .repartition("v").sortWithinPartitions("v"))
     nodes = sym.select(F.col("u").alias("v")).distinct()
     labels = scope.checkpoint(nodes.select("v", F.col("v").alias("label")))
-    for _ in range(n_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         counts = (sym.join(labels.withColumnRenamed("v", "nb"),
                            F.col("v") == F.col("nb"))
                   .groupBy("u", "label").agg(F.count("*").alias("c")))
@@ -199,11 +192,13 @@ def lpa_communities(edges: DataFrame, n_iter: int = 3) -> DataFrame:
                       .alias("m"))
                 .select(F.col("u").alias("v"),
                         (-F.col("m.nl")).alias("new_label")))
-        new_labels = scope.checkpoint(
-            labels.join(best, "v", "left")
-            .select("v", F.coalesce("new_label", "label").alias("label")))
-        scope.release(labels)
-        labels = new_labels
+        return (labels.join(best, "v", "left")
+                .select("v", F.coalesce("new_label", "label").alias("label")))
+
+    # No early exit: synchronous labels oscillate with period 2 instead
+    # of settling (tests/test_graph.py's path graph), so a fixpoint
+    # check would cost a job per round and rarely fire.
+    labels = scope.iterate(labels, propagate, n_iter)
     scope.release_all_except(labels)
     labels._ckpt_scope = scope  # caller hook: ckpt.release_result(df)
     return labels
@@ -218,43 +213,71 @@ def k_core(edges: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     round count is both deterministic and oracle-unrollable.
 
     Scale: each round is one degree aggregation plus two semi joins on
-    node id; ``localCheckpoint`` truncates lineage the same way the
-    connected-components loop does (operators/dedup.py).
-
-    r12: rounds EARLY-EXIT on an unchanged edge count — the fixpoint
-    check the docstring had always promised "at real scale".  Peeling
-    only ever REMOVES edges, so an unchanged count after a peel means
-    the edge SET is unchanged, every degree is unchanged, and all
-    remaining rounds are provable no-ops — the returned
-    (u, core_degree) frame is bit-identical to the fixed-round
-    trajectory the oracle unrolls.  The count reads the round's
-    already-materialized (eager-checkpoint) edge blocks, a ~0.1 s scan
-    vs ~1 s per skipped peel; measured at sf0.1 the co-purchase graph
-    is ALREADY its own 3-core (2.39M symmetric edges, zero nodes
-    peeled), so 5 of 6 rounds were pure no-op work.
+    node id, checkpointed by ``CheckpointScope.iterate``.  The loop
+    stops at the first peel that leaves the edge count unchanged:
+    peeling only ever REMOVES edges, so an unchanged count means an
+    unchanged edge set, hence unchanged degrees, and every remaining
+    peel is a no-op — the result equals the fixed-round trajectory the
+    oracle unrolls.  The count reads the round's already-materialized
+    edge blocks.
     """
-    # Storage lifecycle (operators/ckpt.py): each peel's surviving edge
-    # list supersedes the previous one (released immediately); the
-    # returned per-node result is checkpointed so the last edge list
-    # can be released too.
     scope = CheckpointScope(edges)
     sym = scope.checkpoint(symmetrize(edges))
-    n_edges = sym.count()
-    for _ in range(rounds):
-        deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-        keep = deg.where(F.col("d") >= k).select("u")
-        new_sym = scope.checkpoint(
-            sym.join(keep, "u", "left_semi")
-               .join(keep.withColumnRenamed("u", "v"), "v", "left_semi"))
-        scope.release(sym)
-        sym = new_sym
-        new_n = sym.count()
-        if new_n == n_edges:
-            break  # fixpoint: this peel removed nothing
-        n_edges = new_n
+
+    def peel(sym: DataFrame) -> DataFrame:
+        keep = (sym.groupBy("u").agg(F.count("*").alias("d"))
+                .where(F.col("d") >= k).select("u"))
+        return (sym.join(keep, "u", "left_semi")
+                .join(keep.withColumnRenamed("u", "v"), "v", "left_semi"))
+
+    sym = scope.iterate(sym, peel, rounds, signature=lambda s: s.count())
+    # the per-node result is checkpointed so the last edge list can go
     out = scope.checkpoint(
         sym.groupBy("u").agg(F.count("*").alias("core_degree"))
         .where(F.col("core_degree") >= k))
     scope.release_all_except(out)
     out._ckpt_scope = scope  # caller hook: ckpt.release_result(df)
     return out
+
+
+def shortest_paths(sym: DataFrame, sources: Column, cost: Column,
+                   rounds: int = 4) -> DataFrame:
+    """Multi-source shortest paths by ``rounds`` bounded Bellman-Ford
+    relaxations over a symmetric edge list ``sym`` (u, v, …): returns
+    (u, dist) for every node within ``rounds`` edges of a source, dist
+    a long.  ``sources`` is a predicate on ``sym.u`` selecting the seed
+    nodes (distance 0); ``cost`` is the price of traversing an edge,
+    evaluated on the joined (u, dist, v, …) row — ``F.lit(1)`` for hop
+    distance, an integer weight column for weighted paths.  Costs must
+    be integers: that keeps every distance exact and the early exit
+    below sound.
+
+    Each round is one edge-keyed join + a node-keyed min, the
+    shuffle-per-round contract shared with PageRank/LPA/k-core; the
+    loop stops at the first round that changes no distance (measured
+    at sf0.1: the 4-round co-purchase runs reach it after round 2).
+    The edge list is materialized once so rounds don't re-derive it.
+    """
+    scope = CheckpointScope(sym)
+    sym = scope.checkpoint(sym)
+    dist = scope.checkpoint(
+        sym.where(sources).select("u").distinct()
+        .select("u", F.lit(0).cast("long").alias("dist")))
+
+    def relax(dist: DataFrame) -> DataFrame:
+        relaxed = (dist.join(sym, "u")
+                   .select(F.col("v").alias("u"),
+                           (F.col("dist") + cost).alias("dist")))
+        return (dist.unionByName(relaxed)
+                .groupBy("u").agg(F.min("dist").alias("dist")))
+
+    # Relaxing only adds nodes and only lowers distances, so an
+    # unchanged (count, sum of distances) means an unchanged state and
+    # every later round is a no-op.  The sum is taken as decimal(38,0),
+    # which no long-valued sum over < 10^19 rows can overflow.
+    dist = scope.iterate(dist, relax, rounds, signature=lambda s: tuple(
+        s.agg(F.count("*"),
+              F.sum(F.col("dist").cast("decimal(38,0)"))).first()))
+    scope.release_all_except(dist)
+    dist._ckpt_scope = scope  # caller hook: ckpt.release_result(df)
+    return dist

@@ -21,14 +21,11 @@ symbol algebra identical to the BPE operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from results_ingestor_spark.operators.bpe import (
-    _initial_symbols,
-    _merge_fold,
-)
+from results_ingestor_spark.operators.bpe import _pair_counts, greedy_merges
 
 WP_SCHEMA = T.StructType([
     T.StructField("merge_rank", T.IntegerType(), False),
@@ -47,55 +44,22 @@ def train_wordpiece_merges(docs: DataFrame, n_merges: int = 8,
     rounded to 12 dp for display; selection happens on the raw double
     (exact-integer division — no rounding needed for determinism)
     under the (score DESC, left ASC, right ASC) tie-break."""
-    from results_ingestor_spark.operators.ckpt import CheckpointScope
-
-    spark = docs.sparkSession
-    # Storage lifecycle: driver-side result, so all vocab-sized
-    # checkpoints are releasable (one-iteration delay for lazy
-    # successors — see train_bpe_merges).
-    scope = CheckpointScope(docs)
-    words = (docs
-             .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-             .where(F.col("word") != "")
-             .groupBy("word").agg(F.count("*").alias("cnt"))
-             .select(_initial_symbols().alias("symbols"), "cnt"))
-    words = scope.checkpoint(words)
-    pending_release = None
-
-    merges: list[tuple[int, str, str, str, int, float]] = []
-    for rank in range(n_merges):
-        n = F.size("symbols")
+    def most_likely(words: DataFrame) -> Row | None:
         sym_counts = (words
                       .select("cnt", F.explode("symbols").alias("s"))
                       .groupBy("s").agg(F.sum("cnt").alias("sc")))
-        pairs = (words.select(
-            "cnt",
-            F.explode(F.arrays_zip(
-                F.slice("symbols", 1, n - 1).alias("a"),
-                F.slice("symbols", 2, n - 1).alias("b"))).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("c")))
         ca = sym_counts.select(F.col("s").alias("a"),
                                F.col("sc").alias("ca"))
         cb = sym_counts.select(F.col("s").alias("b"),
                                F.col("sc").alias("cb"))
-        scored = (pairs.join(F.broadcast(ca), "a")
+        scored = (_pair_counts(words).join(F.broadcast(ca), "a")
                   .join(F.broadcast(cb), "b")
                   .select("a", "b", "c",
                           (F.col("c").cast("double")
                            / (F.col("ca") * F.col("cb"))).alias("score")))
-        top = (scored.orderBy(F.desc("score"), F.asc("a"), F.asc("b"))
-               .first())  # single-row driver collect per merge
-        if pending_release is not None:
-            scope.release(pending_release)
-        if top is None:
-            break
-        merges.append((rank, top["a"], top["b"], top["a"] + top["b"],
-                       int(top["c"]), round(float(top["score"]), 12)))
-        new_words = scope.checkpoint(
-            words.withColumn("symbols", _merge_fold(top["a"], top["b"])),
-            eager=False)
-        pending_release = words
-        words = new_words
-    scope.release_all_except()
-    return spark.createDataFrame(merges, WP_SCHEMA)
+        return (scored.orderBy(F.desc("score"), F.asc("a"), F.asc("b"))
+                .first())
+
+    merges = greedy_merges(docs, n_merges, text_col, most_likely,
+                           lambda top: (round(float(top["score"]), 12),))
+    return docs.sparkSession.createDataFrame(merges, WP_SCHEMA)

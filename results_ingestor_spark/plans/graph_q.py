@@ -25,9 +25,10 @@ from results_ingestor_spark.operators.graph import (
     degrees,
     k_core,
     pagerank,
+    shortest_paths,
+    symmetrize,
     triangle_count,
 )
-from results_ingestor_spark.operators.ckpt import CheckpointScope
 from results_ingestor_spark.plans import exact
 from results_ingestor_spark.plans.registry import query
 from results_ingestor_spark.sources.tables import load_tables
@@ -314,29 +315,9 @@ def graph_sssp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-per-round contract as PageRank/LPA/k-core; the oracle
     unrolls the identical 4 relaxations."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    e = copurchase_edges(li)
-    # materialize the derived edge list once — 4 lazy relaxation rounds
-    # would otherwise re-run the co-purchase self-join per round
-    scope = CheckpointScope(li)
-    sym = scope.checkpoint(
-        e.select("u", "v")
-        .unionByName(e.select(F.col("v").alias("u"),
-                              F.col("u").alias("v"))))
-    dist = scope.checkpoint(
-        sym.where(F.col("u") % 199 == 0).select("u").distinct()
-        .select("u", F.lit(0).alias("dist")))
-    for _ in range(4):
-        relaxed = (dist.join(sym, "u")
-                   .select(F.col("v").alias("u"),
-                           (F.col("dist") + 1).alias("dist")))
-        new_dist = scope.checkpoint(
-            dist.unionByName(relaxed)
-            .groupBy("u").agg(F.min("dist").alias("dist")))
-        scope.release(dist)
-        dist = new_dist
-    scope.release_all_except(dist)
-    return (dist.groupBy(F.col("dist").cast("long").alias("dist"))
-            .agg(F.count("*").alias("n_nodes"))
+    dist = shortest_paths(symmetrize(copurchase_edges(li)),
+                          F.col("u") % 199 == 0, F.lit(1), rounds=4)
+    return (dist.groupBy("dist").agg(F.count("*").alias("n_nodes"))
             .orderBy("dist"))
 
 
@@ -484,32 +465,15 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     50 closest nodes to the seed set — the landmark-distance shape
     used for graph embeddings and routing QC.  Each round is one
     edge-keyed join + a node-keyed min — the shuffle-per-round
-    contract shared by PageRank/LPA/k-core/SSSP; the derived edge list
-    is materialized once (localCheckpoint) so rounds don't re-run the
-    co-purchase self-join.  The oracle unrolls the identical 4
-    relaxations as MATERIALIZED CTEs."""
+    contract shared by PageRank/LPA/k-core/SSSP
+    (operators/graph.py::shortest_paths).  The oracle unrolls the
+    identical 4 relaxations as MATERIALIZED CTEs."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     e = copurchase_edges(li)
-    scope = CheckpointScope(li)
-    sym = scope.checkpoint(
-        e.select("u", "v", "w")
-        .unionByName(e.select(F.col("v").alias("u"),
-                              F.col("u").alias("v"), "w")))
-    dist = scope.checkpoint(
-        sym.where(F.col("u") % 199 == 0).select("u").distinct()
-        .select("u", F.lit(0).cast("long").alias("dist")))
-    for _ in range(4):
-        relaxed = (dist.join(sym, "u")
-                   .select(F.col("v").alias("u"),
-                           (F.col("dist") + F.col("w")).alias("dist")))
-        new_dist = scope.checkpoint(
-            dist.unionByName(relaxed)
-            .groupBy("u").agg(F.min("dist").alias("dist")))
-        scope.release(dist)
-        dist = new_dist
-    scope.release_all_except(dist)
-    return (dist.select("u", F.col("dist").cast("long").alias("dist"))
-            .orderBy("dist", "u").limit(50))
+    sym = e.unionByName(e.select(F.col("v").alias("u"),
+                                 F.col("u").alias("v"), "w"))
+    dist = shortest_paths(sym, F.col("u") % 199 == 0, F.col("w"), rounds=4)
+    return dist.orderBy("dist", "u").limit(50)
 
 
 @query("graph_local_clustering", oracle=f"""

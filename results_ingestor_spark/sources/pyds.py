@@ -5,9 +5,11 @@ ingest contract (ingestor_precinct.py:27-31,109-113: per-file delimiter
 sniffing, ``Not Found`` → NULL, align-by-header union) packaged as a
 first-class source instead of driver-side glue:
 
-* **Planning** (driver): read ONE header line per file — sniff the
-  delimiter and collect the column union in first-seen order.  O(#files)
-  driver work, ~one block per file.
+* **Planning** (driver): read ONE header line per file through
+  ``resolver.csv_header`` — the built-in reader's rules: BOM dropped,
+  delimiter sniffed, Spark's header naming — and collect the column
+  union in first-seen order.  O(#files) driver work, ~one block per
+  file.
 * **Execution** (executors): one InputPartition per file; each task
   parses its own file with the stdlib csv reader and aligns rows to the
   unified schema, missing columns → NULL.  Scales with file count, no
@@ -31,8 +33,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     SimpleDataSourceStreamReader)
 from pyspark.sql.types import StringType, StructField, StructType
 
-from results_ingestor_spark.sources.csv_source import (NULL_SENTINEL,
-                                                       sniff_delimiter)
+from results_ingestor_spark.sources.csv_source import NULL_SENTINEL
+from results_ingestor_spark.sources.resolver import csv_header
 
 
 def _list_files(path: str) -> list[str]:
@@ -45,27 +47,39 @@ def _list_files(path: str) -> list[str]:
     return files
 
 
-def _plan(path: str) -> tuple[list[tuple[str, str]], list[str]]:
-    """(file, delimiter) pairs + unified header (first-seen order)."""
-    plan: list[tuple[str, str]] = []
-    columns: list[str] = []
-    seen: set[str] = set()
-    for f in _list_files(path):
-        sep = sniff_delimiter(f)
-        plan.append((f, sep))
-        with open(f, newline="") as fh:
-            header = next(csv.reader(fh, delimiter=sep))
-        for col in header:
-            if col not in seen:
-                seen.add(col)
-                columns.append(col)
-    return plan, columns
+def _header(path: str) -> tuple[str, tuple[str, ...]]:
+    """(delimiter, column names) by the built-in reader's rules
+    (``resolver.csv_header``: BOM dropped, Spark's header naming; the
+    source has no session conf, so names fold case as Spark's default
+    ``spark.sql.caseSensitive=false`` does)."""
+    return csv_header(path, True, NULL_SENTINEL, False)
+
+
+def _columns(path: str) -> list[str]:
+    """Unified header of the files under ``path`` (first-seen order)."""
+    return list(dict.fromkeys(
+        c for f in _list_files(path) for c in _header(f)[1]))
+
+
+def _rows(files: list[str], columns: list[str]):
+    """Every data row of ``files``, aligned to ``columns`` (a column a
+    file lacks, or a ``Not Found`` cell, → None)."""
+    for path in files:
+        sep, header = _header(path)
+        with open(path, encoding="utf-8-sig", errors="replace",
+                  newline="") as fh:
+            rows = csv.reader(fh, delimiter=sep)
+            next(rows, None)
+            for raw in rows:
+                rec = dict(zip(header, raw))
+                yield tuple(
+                    None if (v := rec.get(c)) in (None, NULL_SENTINEL) else v
+                    for c in columns)
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str, sep: str):
+    def __init__(self, path: str):
         self.path = path
-        self.sep = sep
 
 
 class ElectionResultsReader(DataSourceReader):
@@ -76,18 +90,10 @@ class ElectionResultsReader(DataSourceReader):
             raise ValueError("election_results: .load(path) is required")
 
     def partitions(self) -> list[InputPartition]:
-        plan, _ = _plan(self._path)
-        return [_FilePartition(f, sep) for f, sep in plan]
+        return [_FilePartition(f) for f in _list_files(self._path)]
 
     def read(self, partition: _FilePartition):
-        with open(partition.path, newline="") as fh:
-            rows = csv.reader(fh, delimiter=partition.sep)
-            header = next(rows)
-            for raw in rows:
-                rec = dict(zip(header, raw))
-                yield tuple(
-                    None if (v := rec.get(c)) in (None, NULL_SENTINEL) else v
-                    for c in self._columns)
+        return _rows([partition.path], self._columns)
 
 
 class ElectionResultsDataSource(DataSource):
@@ -98,9 +104,8 @@ class ElectionResultsDataSource(DataSource):
         return "election_results"
 
     def schema(self) -> StructType:
-        _, columns = _plan(self.options.get("path", ""))
-        return StructType(
-            [StructField(c, StringType(), True) for c in columns])
+        return StructType([StructField(c, StringType(), True)
+                           for c in _columns(self.options.get("path", ""))])
 
     def reader(self, schema: StructType) -> ElectionResultsReader:
         return ElectionResultsReader(schema, self.options)
@@ -137,19 +142,6 @@ class ElectionResultsStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"files": []}
 
-    def _rows_of(self, files: list[str]):
-        for path in files:
-            sep = sniff_delimiter(path)
-            with open(path, newline="") as fh:
-                rows = csv.reader(fh, delimiter=sep)
-                header = next(rows)
-                for raw in rows:
-                    rec = dict(zip(header, raw))
-                    yield tuple(
-                        None if (v := rec.get(c)) in (None, NULL_SENTINEL)
-                        else v
-                        for c in self._columns)
-
     def read(self, start: dict):
         seen = set(start["files"])
         new = [f for f in _list_files(self._path) if f not in seen]
@@ -157,8 +149,8 @@ class ElectionResultsStreamReader(SimpleDataSourceStreamReader):
         # a LIST, not a generator: the engine prefetches and pickles
         # the batch driver-side (the simple-reader contract — meant for
         # low-volume control-plane streams like this file feed)
-        return list(self._rows_of(new)), end
+        return list(_rows(new, self._columns)), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         delta = [f for f in end["files"] if f not in set(start["files"])]
-        return list(self._rows_of(delta))
+        return list(_rows(delta, self._columns))

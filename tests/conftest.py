@@ -21,3 +21,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def assert_matches_oracle(spark, sf_dir):
+    """Check one registry entry against its DuckDB oracle cell-for-cell:
+    tools/check_correctness.py's exact, type-tagged, order-insensitive
+    comparison.  The entry's checkpointed result is released after."""
+    import duckdb
+
+    from results_ingestor_spark.operators.ckpt import release_result
+    from results_ingestor_spark.plans import ORACLES, QUERIES
+    from results_ingestor_spark.sources.tables import TABLE_NAMES
+    from tools.check_correctness import _rowset
+
+    def check(name: str) -> None:
+        df = QUERIES[name](spark, sf_dir)
+        got = _rowset(df.columns, [tuple(r) for r in df.collect()])
+        release_result(df)
+        con = duckdb.connect()
+        for t in TABLE_NAMES:
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{t}.parquet')")
+        rel = con.sql(ORACLES[name])
+        assert sorted(df.columns) == sorted(rel.columns)
+        assert got == _rowset(rel.columns, rel.fetchall())
+
+    return check

@@ -215,3 +215,117 @@ def test_reliable_env_without_checkpoint_dir_is_rejected(spark, monkeypatch):
         CheckpointScope(spark)
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CKPT", "0")
     assert use_reliable_checkpoints(spark) is False
+
+
+def test_iterate_leaves_only_the_final_state_persisted(spark):
+    base = _n_persistent(spark)
+    scope = CheckpointScope(spark)
+    start = scope.checkpoint(spark.range(10))
+    out = scope.iterate(start, lambda df: df.selectExpr("id + 1 AS id"), 3)
+    assert _n_persistent(spark) == base + 1  # every superseded state went
+    assert sorted(r.id for r in out.collect()) == list(range(3, 13))
+    scope.release_all_except()
+    assert _n_persistent(spark) == base
+
+
+def test_iterate_stops_after_a_round_with_unchanged_signature(spark):
+    steps = []
+
+    def step(df):
+        steps.append(1)
+        return df.selectExpr("least(id + 1, 3) AS id")
+
+    scope = CheckpointScope(spark)
+    out = scope.iterate(scope.checkpoint(spark.range(1)), step, 10,
+                        signature=lambda s: s.first().id)
+    # 0→1→2→3 changes it three times; the fourth round leaves it at 3
+    assert len(steps) == 4
+    assert out.first().id == 3
+    scope.release_all_except()
+
+
+def test_iterate_without_signature_runs_every_round(spark):
+    steps = []
+
+    def step(df):  # a fixpoint from the start: only a signature could stop
+        steps.append(1)
+        return df
+
+    scope = CheckpointScope(spark)
+    out = scope.iterate(scope.checkpoint(spark.range(4)), step, 5)
+    assert len(steps) == 5
+    assert out.count() == 4
+    scope.release_all_except()
+
+
+def _iterative_results(spark, sf_dir):
+    """Exact rowsets of every operator on ``CheckpointScope.iterate``."""
+    from pyspark.sql import functions as F
+
+    from results_ingestor_spark.operators.dedup import connected_components
+    from results_ingestor_spark.operators.graph import (
+        copurchase_edges, k_core, lpa_communities, shortest_paths,
+        symmetrize)
+    from results_ingestor_spark.sources.tables import load_tables
+    from tools.check_correctness import _rowset
+
+    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
+    e = copurchase_edges(li)
+    strong = copurchase_edges(li, min_weight=2)
+    seeds = F.col("u") % 199 == 0
+    frames = {
+        "lpa": lpa_communities(strong),
+        "k_core": k_core(e),
+        "cc": connected_components(
+            strong.select(F.col("u").alias("id_a"), F.col("v").alias("id_b")),
+            symmetrize(strong).select(F.col("u").alias("doc_id")).distinct()),
+        "hops": shortest_paths(symmetrize(e), seeds, F.lit(1)),
+        "weighted": shortest_paths(
+            e.unionByName(e.select(F.col("v").alias("u"),
+                                   F.col("u").alias("v"), "w")),
+            seeds, F.col("w")),
+    }
+    out = {}
+    for name, df in frames.items():
+        out[name] = _rowset(df.columns, [tuple(r) for r in df.collect()])
+        release_result(df)
+    return out
+
+
+def test_iterative_operators_agree_across_checkpoint_modes(
+        spark, sf_dir, monkeypatch):
+    # The loop's release policy must not change a result whichever
+    # checkpoint kind backs it: localCheckpoint blocks vs reliable
+    # checkpoint files (a checkpoint dir set, as on a cluster).
+    import tempfile
+
+    from results_ingestor_spark.operators.ckpt import (
+        use_reliable_checkpoints)
+
+    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CKPT", raising=False)
+    local = _iterative_results(spark, sf_dir)
+    assert all(local.values())
+    with tempfile.TemporaryDirectory() as d:
+        spark.sparkContext.setCheckpointDir(d)
+        try:
+            assert use_reliable_checkpoints(spark) is True
+            reliable = _iterative_results(spark, sf_dir)
+            assert any(os.scandir(d))       # files written to the dir
+        finally:
+            none_opt = spark._jvm.scala.Option.apply(None)
+            getattr(spark.sparkContext._jsc.sc(),
+                    "checkpointDir_$eq")(none_opt)
+            assert use_reliable_checkpoints(spark) is False
+    assert reliable == local
+
+
+@pytest.mark.parametrize("name", [
+    "graph_sssp_frontier", "graph_sssp_weighted", "graph_k_core",
+    "graph_lpa_communities", "dedup_clusters", "er_candidate_records",
+    "bpe_train_merges", "wordpiece_train_merges"])
+def test_loop_entries_match_oracle(assert_matches_oracle, name):
+    """The entries on the checkpointed-iteration loop and on the shared
+    greedy-merge trainer equal their DuckDB oracles cell-for-cell; the
+    oracles unroll every round, so a wrong early exit or a dropped
+    round shows."""
+    assert_matches_oracle(name)

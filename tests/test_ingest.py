@@ -73,6 +73,35 @@ def test_python_datasource_matches_builtin_reader(spark, fixture_dir):
     assert ds.rdd.getNumPartitions() == 2  # one per file
 
 
+def test_python_datasource_reads_headers_like_builtin_reader(spark, tmp_path):
+    """A UTF-8 BOM is dropped and header cells are named by Spark's rule
+    (empty cell → ``_c<i>``) in the Python DataSource's batch AND
+    streaming paths, exactly as ``read_result_files`` does."""
+    from results_ingestor_spark.sources import pyds
+    pyds.register(spark)
+    src = tmp_path / "bom"
+    src.mkdir()
+    (src / "a.csv").write_bytes(
+        "\ufeffCounty,Votes,\nWAKE,10,x\nDURHAM,Not Found,y\n".encode())
+    builtin = read_result_files(spark, str(src), infer_schema=False)
+    assert builtin.columns == ["County", "Votes", "_c2"]
+    want = sorted(map(tuple, builtin.collect()), key=str)
+
+    batch = spark.read.format("election_results").load(str(src))
+    assert batch.columns == builtin.columns
+    assert sorted(map(tuple, batch.collect()), key=str) == want
+
+    sink = str(tmp_path / "bronze")
+    q = (spark.readStream.format("election_results").load(str(src))
+         .writeStream.format("parquet").option("path", sink)
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    stream = spark.read.parquet(sink)
+    assert stream.columns == builtin.columns
+    assert sorted(map(tuple, stream.collect()), key=str) == want
+
+
 def test_wratio_published_goldens():
     # Golden values from the published fuzzywuzzy docs/tests (difflib
     # backend, as it runs without python-Levenshtein) — the scorer the

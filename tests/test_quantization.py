@@ -121,25 +121,9 @@ def test_adc_exact_when_codebook_holds_every_vector(spark):
 @pytest.mark.parametrize("name", [
     "ann_ivf_topk", "ann_ivf_index_stats", "embedding_pq_compression",
     "ann_pq_adc_topk", "dedup_semantic_clusters"])
-def test_trainer_entries_match_oracle(spark, sf_dir, name):
+def test_trainer_entries_match_oracle(assert_matches_oracle, name):
     """Every entry built on the shared Lloyd trainer equals its DuckDB
     oracle cell-for-cell (tools/check_correctness.py's exact, type-tagged
     comparison, order-insensitive) — the k-means and PQ oracles replay
     seeding, folds and updates in SQL, so a drifted centroid shows."""
-    import duckdb
-
-    from results_ingestor_spark.operators.ckpt import release_result
-    from results_ingestor_spark.plans import ORACLES, QUERIES
-    from results_ingestor_spark.sources.tables import TABLE_NAMES
-    from tools.check_correctness import _rowset
-
-    df = QUERIES[name](spark, sf_dir)
-    got = _rowset(df.columns, [tuple(r) for r in df.collect()])
-    release_result(df)
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')")
-    rel = con.sql(ORACLES[name])
-    assert sorted(df.columns) == sorted(rel.columns)
-    assert got == _rowset(rel.columns, rel.fetchall())
+    assert_matches_oracle(name)
