@@ -4,6 +4,15 @@ All JVM-side (``F.zip_with`` / ``F.aggregate`` run inside codegen) — no
 Python UDF in the similarity hot path.  Arithmetic is done in double
 precision (Spark promotes float elements on cast) so results match the
 DuckDB oracle bit-for-bit after rounding.
+
+Norms are computed once per vector, never per pair or per element: a
+relation that feeds a pair join carries ``l2_norm`` as a column
+(``operators/similarity.py::normed``) and ``cosine`` reads it, the
+shape of the oracle's ``dot / (nq.nrm * nc.nrm)``.  This is exact:
+``l2_norm`` is a deterministic sequential fold over one vector, so
+evaluating it once per vector yields the same double it yields when
+re-folded for every pair or element — no output bit depends on where
+it is evaluated.
 """
 
 from __future__ import annotations
@@ -28,6 +37,8 @@ def l2_norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; NULL when either norm is zero."""
-    return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
+def cosine(a: Column | str, na: Column | str,
+           b: Column | str, nb: Column | str) -> Column:
+    """Cosine of vectors ``a``, ``b`` with precomputed norms ``na``,
+    ``nb``; NULL when either norm is zero."""
+    return dot(a, b) / F.nullif(_c(na) * _c(nb), F.lit(0.0))

@@ -107,6 +107,17 @@ def release_result(df: DataFrame) -> None:
         scope.release_all_except()
 
 
+def carry_scope(out: DataFrame, src: DataFrame) -> DataFrame:
+    """Hand ``src``'s checkpoint scope on to ``out``, a frame derived
+    from it (a groupBy, join or projection of an iterative operator's
+    result), so ``release_result(out)`` frees the blocks behind
+    ``src``."""
+    scope = getattr(src, "_ckpt_scope", None)
+    if scope is not None:
+        out._ckpt_scope = scope
+    return out
+
+
 def _jmap(spark):
     return spark.sparkContext._jsc.getPersistentRDDs()
 

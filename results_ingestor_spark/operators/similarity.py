@@ -1,17 +1,21 @@
 """Similarity search over embedding columns (north-star M3).
 
 Two tiers:
-* ``brute_force_topk`` — exact cosine top-k.  The dot product is a
-  JVM-side ``zip_with``/``aggregate`` fold (no UDF); per query vector the
-  cost is one pass over the candidate set.  Correct, oracle-checkable,
-  and the right baseline at any scale where queries × candidates fits a
-  shuffle-free broadcast join.
-* ``lsh_bucketed_topk`` — the scale path: 16 random-hyperplane sign bits
-  bucket the space; candidates share the query's bucket up to
-  ``max_hamming`` bit flips.  Hyperplane components are md5-derived
-  (deterministic, no stored model).  Recall is tested against brute
-  force in tests/test_similarity.py; the driver records a rows-only
-  check (approximate ops have no exact SQL twin).
+* ``brute_force_topk`` — exact cosine top-k, a JVM-side fold (no UDF)
+  per query × candidate; oracle-checkable, and the right baseline at
+  any scale where the query set fits a broadcast.
+* ``lsh_bucketed_topk`` — the scale path: 16 md5-derived
+  random-hyperplane sign bits bucket the space; candidates share the
+  query's bucket up to ``max_hamming`` bit flips (recall vs brute force
+  in tests/test_similarity.py).
+
+One cosine path: every relation feeding a pair join is ``normed`` (its
+L2 norms computed once per vector, carried as a column) and every pair
+is scored by ``functions/vector.py::cosine`` over two of them — no pair
+expression evaluates a norm, and the output is bit-identical to
+folding both norms per pair (argument in functions/vector.py).  Around
+the score there is one top-k tail (``_top_k``), one IVF probe body
+(``_ivf_search``) and one banded candidate generator (``banded_pairs``).
 
 At 100 TB: both paths broadcast the (small) query set; the LSH path
 additionally prunes candidates by bucket before any dot product, cutting
@@ -27,9 +31,10 @@ import math as _math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from results_ingestor_spark.functions.vector import cosine_similarity
+from results_ingestor_spark.functions.vector import cosine, dot, l2_norm
 from results_ingestor_spark.operators.quantization import (
     codebook_relation, lloyd_train)
+from results_ingestor_spark.sources.tables import ensure_min_parallelism
 
 N_PLANES = 16
 _PLANE_MOD = 2001  # component ∈ [-1, 1] in steps of 1e-3
@@ -52,14 +57,36 @@ def bucket_expr(vec_col: str, dim: int) -> F.Column:
     planes = hyperplanes(dim)
     bits = None
     for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), arr,
-                       lambda a, b: a.cast("double") * b),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bit = F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        side = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
+        bit = F.when(side > 0, F.lit(1 << j)).otherwise(F.lit(0))
         bits = bit if bits is None else bits + bit
     return bits.cast("int")
+
+
+def normed(df: DataFrame, vec_col: str, vec_as: str, nrm_as: str,
+           *keys) -> DataFrame:
+    """The norm-carrying vector relation: ``keys``, then ``vec_col`` as
+    ``vec_as`` and its L2 norm as ``nrm_as``, evaluated once per row."""
+    return df.select(*keys, F.col(vec_col).alias(vec_as),
+                     l2_norm(vec_col).alias(nrm_as))
+
+
+def _pair_cosine(a: str = "qvec", na: str = "qn", b: str = "cvec",
+                 nb: str = "cn") -> F.Column:
+    """The pair score: ``cosine`` over two norm-carrying relations,
+    snapped to 9 dp for an engine-portable ordering."""
+    from results_ingestor_spark.plans import exact
+    return exact.snap_double_col(cosine(a, na, b, nb), 9)
+
+
+def _top_k(df: DataFrame, part: str, score: str, tie: str,
+           k: int) -> DataFrame:
+    """Rows ranked 1..k within ``part`` by ``score`` descending, ties to
+    the lowest ``tie``, with their rank ``rn`` (the rank-limit is pushed
+    into the sort buffer as a WindowGroupLimit)."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return (df.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= k))
 
 
 def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
@@ -69,19 +96,13 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     cosine in-JVM, per-query window top-k (rank-limit pushed into the
     sort buffer).  Rounded to 9 decimals for a stable, engine-portable
     ordering."""
-    from results_ingestor_spark.plans import exact
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
-    c = ensure_min_parallelism(vectors).select(F.col(id_col).alias("cand_id"),
-                                               F.col(vec_col).alias("cvec"))
+    q = normed(queries, vec_col, "qvec", "qn", F.col(id_col).alias("query_id"))
+    c = normed(ensure_min_parallelism(vectors), vec_col, "cvec", "cn",
+               F.col(id_col).alias("cand_id"))
     sims = (c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id"))
             .select("query_id", "cand_id",
-                    exact.snap_double_col(cosine_similarity("qvec", "cvec"), 9).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (sims.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "cand_id", "cosine", "rn"))
+                    _pair_cosine().alias("cosine")))
+    return _top_k(sims, "query_id", "cosine", "cand_id", k)
 
 
 def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, dim: int,
@@ -91,26 +112,57 @@ def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, dim: int,
     """Approximate top-k: prefilter candidates to buckets within
     ``max_hamming`` sign-bit flips of the query's bucket, then exact
     cosine + window top-k on the survivors."""
-    from results_ingestor_spark.plans import exact
-    bq = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("qvec"),
-                        bucket_expr(vec_col, dim).alias("qbucket"))
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
-    vectors = ensure_min_parallelism(vectors)
-    bc = vectors.select(F.col(id_col).alias("cand_id"),
-                        F.col(vec_col).alias("cvec"),
-                        bucket_expr(vec_col, dim).alias("cbucket"))
+    bq = normed(queries, vec_col, "qvec", "qn", F.col(id_col).alias("query_id"),
+                bucket_expr(vec_col, dim).alias("qbucket"))
+    bc = normed(ensure_min_parallelism(vectors), vec_col, "cvec", "cn",
+                F.col(id_col).alias("cand_id"),
+                bucket_expr(vec_col, dim).alias("cbucket"))
     cand = (bc.join(F.broadcast(bq),
                     (F.col("query_id") != F.col("cand_id"))
                     & (F.bit_count(F.col("qbucket").bitwiseXOR(F.col("cbucket")))
                        <= max_hamming)))
-    sims = cand.select(
-        "query_id", "cand_id",
-        exact.snap_double_col(cosine_similarity("qvec", "cvec"), 9).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (sims.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "cand_id", "cosine", "rn"))
+    sims = cand.select("query_id", "cand_id", _pair_cosine().alias("cosine"))
+    return _top_k(sims, "query_id", "cosine", "cand_id", k)
+
+
+def banded_pairs(vectors: DataFrame, dim: int, a: str, b: str,
+                 ordered: bool) -> DataFrame:
+    """Banded sign-bit LSH candidate pairs ``(a, b, cosine)`` of the
+    ``vec_id``/``embedding`` rows: the 16 ``bucket_expr`` bits split
+    into 4 bands of 4; a pair is a candidate iff it collides on ANY band
+    (OR across bands lifts recall the way single-bucket equality
+    cannot), and exact cosine (9 dp) scores each candidate once.
+    ``ordered`` keeps each unordered pair once (a < b); otherwise both
+    directions (a != b).  Every stage is an equi-join: the shuffle
+    carries (band key, id), vector bodies move only for candidate ids,
+    and no all-pairs join exists."""
+    e = ensure_min_parallelism(vectors).select("vec_id", "embedding")
+    bkt = e.select("vec_id", bucket_expr("embedding", dim).alias("bkt"))
+    keyed = bkt.select(
+        "vec_id",
+        F.explode(F.array(*[
+            F.struct(F.lit(j).alias("bidx"),
+                     F.shiftright(F.col("bkt"), 4 * j).bitwiseAND(F.lit(15))
+                     .alias("bkey"))
+            for j in range(4)])).alias("band"),
+    ).select("vec_id", "band.bidx", "band.bkey")
+    left, right = F.col("l.vec_id"), F.col("r.vec_id")
+    cand = (keyed.alias("l").join(keyed.alias("r"), ["bidx", "bkey"])
+            .where(left < right if ordered else left != right)
+            .select(left.alias(a), right.alias(b))
+            .distinct())
+    va = normed(e, "embedding", "va", "na", F.col("vec_id").alias(a))
+    vb = normed(e, "embedding", "vb", "nb", F.col("vec_id").alias(b))
+    return (cand.join(va, a).join(vb, b)
+            .select(a, b, _pair_cosine("va", "na", "vb", "nb").alias("cosine")))
+
+
+def knn_graph_banded(vectors: DataFrame, dim: int, k: int) -> DataFrame:
+    """Approximate kNN graph ``(src, nbr, cosine, rn)``: each node's
+    top-k ``banded_pairs`` candidates by cosine, ties to the lowest
+    neighbor id.  Nodes whose bands collide with nothing emit no rows."""
+    return _top_k(banded_pairs(vectors, dim, "src", "nbr", ordered=False),
+                  "src", "cosine", "nbr", k)
 
 
 def maxsim_topk(tokens: DataFrame, query_tokens: DataFrame, k: int = 10,
@@ -134,26 +186,19 @@ def maxsim_topk(tokens: DataFrame, query_tokens: DataFrame, k: int = 10,
     ordering (fold order differs across engines at ~1e-16).
     """
     from results_ingestor_spark.plans import exact
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
-    q = query_tokens.select(F.col(doc_col).alias("query_doc"),
-                            F.col(tok_col).alias("qtok"),
-                            F.col(vec_col).alias("qvec"))
-    c = ensure_min_parallelism(tokens).select(
-        F.col(doc_col).alias("cand_doc"), F.col(vec_col).alias("cvec"))
+    q = normed(query_tokens, vec_col, "qvec", "qn",
+               F.col(doc_col).alias("query_doc"), F.col(tok_col).alias("qtok"))
+    c = normed(ensure_min_parallelism(tokens), vec_col, "cvec", "cn",
+               F.col(doc_col).alias("cand_doc"))
     tok_sims = (c.join(F.broadcast(q),
                        F.col("query_doc") != F.col("cand_doc"))
                 .select("query_doc", "cand_doc", "qtok",
-                        exact.snap_double_col(cosine_similarity("qvec", "cvec"), 9)
-                        .alias("cos")))
+                        _pair_cosine().alias("cos")))
     best = (tok_sims.groupBy("query_doc", "cand_doc", "qtok")
             .agg(F.max("cos").alias("best")))
     scores = (best.groupBy("query_doc", "cand_doc")
               .agg(exact.snap_double_col(F.sum("best"), 6).alias("maxsim")))
-    w = Window.partitionBy("query_doc").orderBy(F.desc("maxsim"),
-                                                F.asc("cand_doc"))
-    return (scores.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_doc", "cand_doc", "maxsim", "rn"))
+    return _top_k(scores, "query_doc", "maxsim", "cand_doc", k)
 
 
 def _l2_normalized(centroids: list[list[float]]) -> list[list[float]]:
@@ -175,12 +220,9 @@ def _argmax_fold(book: F.Column, vec: F.Column) -> F.Column:
     dropped inside higher-order-function lambdas."""
 
     def merge(acc, cs):
-        dot = F.aggregate(
-            F.zip_with(vec, cs["c"], lambda a, b: a.cast("double") * b),
-            F.lit(0.0), lambda s, x: s + x)
-        return (F.when(dot > acc["s"],
-                       F.named_struct(F.lit("code"), cs["code"],
-                                      F.lit("s"), dot))
+        d = dot(vec, cs["c"])
+        return (F.when(d > acc["s"],
+                       F.named_struct(F.lit("code"), cs["code"], F.lit("s"), d))
                 .otherwise(acc))
 
     init = F.named_struct(F.lit("code"), F.lit(-1),
@@ -193,9 +235,8 @@ def assign_centroid_expr(centroids: list[list[float]], vec_col: str) -> F.Column
     centroid matrix folded as PLAN LITERALS — zero joins, zero extra
     operators.  Right for small FIXED k (the IVF coarse quantizers);
     for corpus-derived k (the SemDeDup k=isqrt(n) contract) use
-    ``assign_centroids``, which keeps the plan O(1) in k (VERDICT r6
-    item 4: at 100 TB, k≈10⁴-10⁵ literal vectors make the expression
-    tree itself the bottleneck)."""
+    ``assign_centroids``, which keeps the plan O(1) in k (at 100 TB,
+    k≈10⁴-10⁵ literal vectors make the expression tree the bottleneck)."""
     book = F.array(*[
         F.struct(F.lit(i).alias("code"),
                  F.array(*[F.lit(x) for x in c]).alias("c"))
@@ -240,9 +281,7 @@ def kmeans_centroids(vectors: DataFrame, n_clusters: int = 10,
     as Spark MLlib's own KMeans; an empty cluster keeps its previous
     centroid.  The broadcast row, not a literal fold, even for small
     k: the centroids change every iteration, so literals would rebuild
-    a k x dim expression tree and compile fresh codegen per iteration
-    (r11: 2-iteration isqrt(n) training at sf0.1 ran ~2.5x faster on
-    the data path)."""
+    a k x dim expression tree and compile fresh codegen per iteration."""
     view = vectors.select(F.lit(0).alias("grp"), F.col(id_col).alias("vid"),
                           F.col(vec_col).cast("array<double>").alias("v"))
     return lloyd_train(view, 1, n_clusters, n_iter, _argmax_fold,
@@ -258,36 +297,36 @@ def ivf_topk_kmeans(vectors: DataFrame, queries: DataFrame, k: int = 10,
     expression, queries probe their ``nprobe`` nearest centroid lists.
     At scale the assigned table is written partitioned by centroid_id so
     probes are partition-pruned scans."""
-    from results_ingestor_spark.plans import exact
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
     cents_list = kmeans_centroids(vectors, n_clusters, n_iter, id_col, vec_col)
-    spark = vectors.sparkSession
-    cents = spark.createDataFrame(
+    cents = vectors.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents_list)],
         "centroid_id int, centroid array<double>")
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
-    qc = (q.join(F.broadcast(cents))
-          .select("query_id", "qvec", "centroid_id",
-                  cosine_similarity("qvec", "centroid").alias("csim")))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("csim"),
-                                                F.asc("centroid_id"))
-    probes = (qc.withColumn("rn", F.row_number().over(wq))
-              .where(F.col("rn") <= nprobe)
-              .select("query_id", "qvec", "centroid_id"))
-    cand = (ensure_min_parallelism(vectors)
-            .select(F.col(id_col).alias("cand_id"),
-                    F.col(vec_col).alias("cvec"),
-                    assign_centroid_expr(cents_list, vec_col)
-                    .alias("centroid_id")))
+    return _ivf_search(vectors, queries, cents,
+                       assign_centroid_expr(cents_list, vec_col),
+                       k, nprobe, id_col, vec_col)
+
+
+def _ivf_search(vectors: DataFrame, queries: DataFrame, cents: DataFrame,
+                list_id, k: int, nprobe: int, id_col: str,
+                vec_col: str) -> DataFrame:
+    """The IVF probe body both variants share: rank the
+    ``(centroid_id, centroid)`` lists per query by cosine (ties to the
+    lowest id), keep ``nprobe``, then exact cosine top-k over the
+    candidates whose ``list_id`` is a probed list."""
+    q = normed(queries, vec_col, "qvec", "qn", F.col(id_col).alias("query_id"))
+    qc = (q.join(F.broadcast(normed(cents, "centroid", "centroid", "cnrm",
+                                    "centroid_id")))
+          .select("query_id", "qvec", "qn", "centroid_id",
+                  cosine("qvec", "qn", "centroid", "cnrm").alias("csim")))
+    probes = (_top_k(qc, "query_id", "csim", "centroid_id", nprobe)
+              .select("query_id", "qvec", "qn", "centroid_id"))
+    cand = normed(ensure_min_parallelism(vectors), vec_col, "cvec", "cn",
+                  F.col(id_col).alias("cand_id"), list_id.alias("centroid_id"))
     sims = (cand.join(F.broadcast(probes), "centroid_id")
             .where(F.col("query_id") != F.col("cand_id"))
             .select("query_id", "cand_id",
-                    exact.snap_double_col(cosine_similarity("qvec", "cvec"), 9).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (sims.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "cand_id", "cosine", "rn"))
+                    _pair_cosine().alias("cosine")))
+    return _top_k(sims, "query_id", "cosine", "cand_id", k)
 
 
 def label_centroids(vectors: DataFrame, id_col: str = "vec_id",
@@ -315,32 +354,9 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     written partitioned by centroid_id, so a probe reads nprobe/N of the
     corpus — candidate pruning happens at the storage layer, not the
     scan."""
-    from results_ingestor_spark.plans import exact
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
-    cents = label_centroids(vectors, id_col, vec_col, label_col)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
-    # rank centroids per query, keep nprobe
-    qc = (q.join(F.broadcast(cents))
-          .select("query_id", "qvec", "centroid_id",
-                  cosine_similarity("qvec", "centroid").alias("csim")))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("csim"),
-                                                F.asc("centroid_id"))
-    probes = (qc.withColumn("rn", F.row_number().over(wq))
-              .where(F.col("rn") <= nprobe)
-              .select("query_id", "qvec", "centroid_id"))
-    cand = (ensure_min_parallelism(vectors)
-            .select(F.col(id_col).alias("cand_id"),
-                    F.col(vec_col).alias("cvec"),
-                    F.col(label_col).alias("centroid_id")))
-    sims = (cand.join(F.broadcast(probes), "centroid_id")
-            .where(F.col("query_id") != F.col("cand_id"))
-            .select("query_id", "cand_id",
-                    exact.snap_double_col(cosine_similarity("qvec", "cvec"), 9).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (sims.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "cand_id", "cosine", "rn"))
+    return _ivf_search(vectors, queries,
+                       label_centroids(vectors, id_col, vec_col, label_col),
+                       F.col(label_col), k, nprobe, id_col, vec_col)
 
 
 def mmr_rerank(vectors: DataFrame, queries: DataFrame, k: int = 10,

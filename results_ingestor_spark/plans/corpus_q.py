@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from results_ingestor_spark.operators.bpe import train_bpe_merges
+from results_ingestor_spark.operators.ckpt import carry_scope
 from results_ingestor_spark.plans import exact
 from results_ingestor_spark.plans.registry import query
 from results_ingestor_spark.sources.tables import load_tables
@@ -439,76 +440,45 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py::assign_centroids); the invariant that every
     dropped doc has a >=tau lower-id neighbor is pinned in
     tests/test_classifier.py's sibling, tests/test_dedup.py."""
-    from results_ingestor_spark.functions.vector import cosine_similarity
+    from results_ingestor_spark.functions.vector import cosine
     from results_ingestor_spark.operators.similarity import (
-        assign_centroids, kmeans_centroids)
+        assign_centroids, kmeans_centroids, normed)
     from results_ingestor_spark.sources.tables import ensure_min_parallelism
     import math
     tau = 0.35
     t = load_tables(spark, sf_dir, ("embeddings",))
     e = ensure_min_parallelism(t["embeddings"]).select("vec_id", "embedding")
-    # k = isqrt(n), ACTUALLY sized to the corpus (round 5: the previous
-    # hardcoded k=8 made the in-cluster pair join quadratic — measured
-    # 45.4 s at 10x data where sqrt-sized k bounds expected cluster
-    # size at sqrt(n) and pair work at ~n^1.5, the SemDeDup contract
-    # the docstring promises).  The count is one driver long; the
-    # oracle computes the identical k via floor(sqrt(count(*))).
-    # Count on the RAW scan, not the repartitioned view (r11): the
-    # count's value is partitioning-independent, and counting before
-    # ensure_min_parallelism lets Spark satisfy it with a column-pruned
-    # parquet scan instead of paying the widening shuffle first —
-    # one fewer exchange in the count job, identical n.
+    # k = isqrt(n) bounds expected cluster size at sqrt(n) and pair work
+    # at ~n^1.5 (the SemDeDup contract); the oracle computes the same k
+    # via floor(sqrt(count(*))).  Counted on the raw scan, before the
+    # widening exchange: same n, one exchange fewer.
     n = t["embeddings"].count()
     k = max(2, math.isqrt(n))
-    # Round-9 shave (VERDICT r8 item 7) — the entry was the bench's
-    # single most expensive query (9.7-10.1 s at sf0.1, ~15% of the
-    # headline).  Profiled split (sf0.1, r9): count ~1.0 s, training
-    # ~8.9 s, final assignment+checkpoint ~2.2 s, pair join ~1.3 s —
-    # training is ~2/3 of the entry, and inside it the dominant term
-    # was NOT arithmetic but per-task scheduling: ensure_min_parallelism blows
-    # the 2,000-row sf0.1 vector view up to 2x-cores partitions, and
-    # every Lloyd job (assignment fold + posexplode mean agg) pays ~64
-    # near-empty tasks.  Two measured fixes, both sweep-re-verified at
-    # both SFs + 5 lottery draws:
-    # (1) size-gated coalesce to ~250 vectors/task (floor 8 — measured
-    #     knee: 64p ~2.8-6 s/iter, 8p ~1.9 s/iter, 1p ~2.1 s/iter).
-    #     coalesce() only ever SHRINKS, so at 100 TB (n/250 >> current
-    #     partitions) it is a provable no-op — the small-SF overhead
-    #     trim cannot regress the at-scale plan.  Partial-mean sum
-    #     order shifts with partitioning, which is inside the same
-    #     ~1e-16 envelope as the engines' own summation-order gap (see
-    #     the oracle docstring's flip-free note).
-    # (2) n_iter 3 -> 2: one fewer full-corpus Lloyd pass.  The
-    #     2-iteration assignment moves 4.9% of vectors vs the 3rd
-    #     iteration (measured at sf0.1) — immaterial for SemDeDup,
-    #     which only needs clusters good enough to BOUND the candidate
-    #     quadratic, not converged centroids; the drop-set invariants
-    #     (test_dedup.py) hold and the oracle replays the identical
-    #     2-iteration chain.
+    # Training cost at small SF is per-task scheduling, not arithmetic:
+    # coalesce to ~250 vectors per task (floor 8; coalesce only shrinks,
+    # so at 100 TB it is a no-op), and 2 Lloyd iterations, which only
+    # need to bound the candidate quadratic (the oracle replays the same
+    # 2-iteration chain; partial-mean order shifts stay inside the
+    # ~1e-16 envelope the oracle docstring's flip-free note covers).
     e = e.coalesce(max(8, n // 250))
     cents = kmeans_centroids(e, n_clusters=k, n_iter=2)
-    # Materialize the assignment ONCE (CheckpointScope lifecycle): the
-    # k x dim fold is the entry's most expensive expression and
-    # three consumers (both pair-join sides + the per-cluster census)
-    # would otherwise each recompute it over the full corpus.  The
-    # vector-sized checkpoint is released before returning; only the
-    # k-row result stays persisted.
-    # assign_centroids: k here is CORPUS-DERIVED (isqrt(n)), so the
-    # centroid matrix rides a broadcast relation as data, keeping the
-    # plan O(1) in k — at 100 TB, k≈10⁴-10⁵ literal vectors would make
-    # the expression tree itself the bottleneck (VERDICT r6 item 4) —
-    # and the fold reuses the class the trainer just compiled.
+    # The assignment is checkpointed once, carrying each vector's norm:
+    # both pair-join sides and the per-cluster census read it, and only
+    # the k-row result stays persisted.  assign_centroids keeps the
+    # corpus-derived centroid matrix on a broadcast relation, so the
+    # plan is O(1) in k.
     from results_ingestor_spark.operators.ckpt import CheckpointScope
     scope = CheckpointScope(e)
-    assigned = scope.checkpoint(assign_centroids(
-        e.select("vec_id", "embedding"), cents, "embedding", "cid"))
+    assigned = scope.checkpoint(normed(assign_centroids(
+        e.select("vec_id", "embedding"), cents, "embedding", "cid"),
+        "embedding", "embedding", "nrm", "vec_id", "cid"))
     a = assigned.select(F.col("cid"), F.col("vec_id").alias("id_a"),
-                        F.col("embedding").alias("va"))
+                        F.col("embedding").alias("va"), F.col("nrm").alias("na"))
     b = assigned.select(F.col("cid"), F.col("vec_id").alias("id_b"),
-                        F.col("embedding").alias("vb"))
+                        F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
     dropped = (a.join(b, "cid")
                .where(F.col("id_a") < F.col("id_b"))
-               .where(exact.snap_double_col(cosine_similarity("va", "vb"), 9) >= tau)
+               .where(exact.snap_double_col(cosine("va", "na", "vb", "nb"), 9) >= tau)
                .select("cid", F.col("id_b").alias("vec_id"))
                .distinct())
     per_cluster = assigned.groupBy("cid").agg(F.count("*").alias("n_vecs"))
@@ -599,8 +569,8 @@ def er_candidate_records(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("id_a", "id_b"))
     labels = connected_components(edges, r.select("rec_id"),
                                   id_col="rec_id")
-    return (labels.groupBy("cluster_rep")
-            .agg(F.count("*").alias("n_records")))
+    return carry_scope(labels.groupBy("cluster_rep")
+                       .agg(F.count("*").alias("n_records")), labels)
 
 
 _DSIR_NB = 128  # hashed n-gram feature buckets
@@ -1818,11 +1788,12 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("first_name").cast("long")
                  .alias("n_first_variants"),
                 F.min("last_name").alias("golden_last")))
-    return (agg.join(gf, "cluster_rep")
-            .join(gm, "cluster_rep", "left")
-            .select("cluster_rep", "n_records", "n_first_variants",
-                    "golden_first",
-                    F.coalesce("golden_middle", F.lit(""))
-                     .alias("golden_middle"),
-                    "golden_last")
-            .orderBy("cluster_rep"))
+    out = (agg.join(gf, "cluster_rep")
+           .join(gm, "cluster_rep", "left")
+           .select("cluster_rep", "n_records", "n_first_variants",
+                   "golden_first",
+                   F.coalesce("golden_middle", F.lit(""))
+                    .alias("golden_middle"),
+                   "golden_last")
+           .orderBy("cluster_rep"))
+    return carry_scope(out, labels)

@@ -244,42 +244,17 @@ WHERE CAST(floor(((SELECT SUM(CAST(xa AS DOUBLE) * CAST(xb AS DOUBLE))
 
 @query("dedup_embedding_cosine", oracle=_embedding_cosine_oracle())
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup, LSH-banded — the scale-safe shape.
-
-    The 16 sign-bit hyperplane buckets (operators/similarity.py::
-    bucket_expr) are split into 4 bands of 4 bits; a pair is a candidate
-    iff it collides on ANY band (classic banding: OR across bands lifts
-    recall the way single-bucket equality cannot).  Exact cosine then
-    verifies only the candidates.  Every stage is an equi-join — at
-    100 TB the shuffle carries (band_key, vec_id) pairs and vector
+    """Embedding-cosine near-dup, LSH-banded — the scale-safe shape:
+    candidate pairs from the banded sign-bit equi-join
+    (operators/similarity.py::banded_pairs, 4 bands of 4 bits, a pair
+    collides on ANY band), exact cosine verifies only the candidates.
+    At 100 TB the shuffle carries (band_key, vec_id) pairs and vector
     bodies move only for candidate ids, never O(n²).  The md5-derived
     planes make the whole pipeline SQL-reproducible, so even this
     approximate path is value-checked against the oracle."""
-    from results_ingestor_spark.functions.vector import cosine_similarity
-    from results_ingestor_spark.operators.similarity import bucket_expr
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
+    from results_ingestor_spark.operators.similarity import banded_pairs
     t = load_tables(spark, sf_dir, ("embeddings",))
-    e = ensure_min_parallelism(t["embeddings"]).select("vec_id", "embedding")
-    bkt = e.select("vec_id", bucket_expr("embedding", 64).alias("bkt"))
-    keyed = bkt.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("bidx"),
-                     F.shiftright(F.col("bkt"), 4 * j).bitwiseAND(F.lit(15))
-                     .alias("bkey"))
-            for j in range(4)])).alias("band"),
-    ).select("vec_id", "band.bidx", "band.bkey")
-    cand = (keyed.alias("l")
-            .join(keyed.alias("r"), ["bidx", "bkey"])
-            .where(F.col("l.vec_id") < F.col("r.vec_id"))
-            .select(F.col("l.vec_id").alias("id_a"),
-                    F.col("r.vec_id").alias("id_b"))
-            .distinct())
-    a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    cos = exact.snap_double_col(cosine_similarity("va", "vb"), 9)
-    return (cand.join(a, "id_a").join(b, "id_b")
-            .select("id_a", "id_b", cos.alias("cosine"))
+    return (banded_pairs(t["embeddings"], 64, "id_a", "id_b", ordered=True)
             .where(F.col("cosine") >= 0.35))
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from results_ingestor_spark.operators.ckpt import carry_scope
 from results_ingestor_spark.operators.graph import (
     common_neighbors_topk,
     copurchase_edges,
@@ -233,10 +234,10 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                         lpa_communities)
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     labels = lpa_communities(copurchase_edges(li, min_weight=2), n_iter=3)
-    return (labels.groupBy(F.col("label").alias("community"))
-            .agg(F.count("*").alias("n_members"))
-            .orderBy(F.desc("n_members"), F.asc("community"))
-            .limit(20))
+    return carry_scope(labels.groupBy(F.col("label").alias("community"))
+                       .agg(F.count("*").alias("n_members"))
+                       .orderBy(F.desc("n_members"), F.asc("community"))
+                       .limit(20), labels)
 
 
 def _k_core_oracle(k: int = 3, rounds: int = 6) -> str:
@@ -274,10 +275,10 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained CTEs, so the bounded-iteration semantics are value-checked
     end-to-end, not just row-counted."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    return (k_core(copurchase_edges(li), k=3, rounds=6)
-            .select("u", F.col("core_degree").cast("long")
-                    .alias("core_degree"))
-            .orderBy("u"))
+    core = k_core(copurchase_edges(li), k=3, rounds=6)
+    return carry_scope(core.select("u", F.col("core_degree").cast("long")
+                                   .alias("core_degree"))
+                       .orderBy("u"), core)
 
 
 def _sssp_oracle(rounds: int = 4) -> str:
@@ -317,8 +318,8 @@ def graph_sssp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     dist = shortest_paths(symmetrize(copurchase_edges(li)),
                           F.col("u") % 199 == 0, F.lit(1), rounds=4)
-    return (dist.groupBy("dist").agg(F.count("*").alias("n_nodes"))
-            .orderBy("dist"))
+    return carry_scope(dist.groupBy("dist").agg(F.count("*").alias("n_nodes"))
+                       .orderBy("dist"), dist)
 
 
 @query("graph_degree_assortativity", oracle=f"""
@@ -473,7 +474,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.unionByName(e.select(F.col("v").alias("u"),
                                  F.col("u").alias("v"), "w"))
     dist = shortest_paths(sym, F.col("u") % 199 == 0, F.col("w"), rounds=4)
-    return dist.orderBy("dist", "u").limit(50)
+    return carry_scope(dist.orderBy("dist", "u").limit(50), dist)
 
 
 @query("graph_local_clustering", oracle=f"""
@@ -770,19 +771,20 @@ def graph_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (i2.cast("double") / F.col("m2")
          - (F.col("dc").cast("double") / F.col("m2"))
          * (F.col("dc").cast("double") / F.col("m2")))
-    return (msize.join(internal, "label", "left")
-            .join(dsum, "label")
-            .crossJoin(F.broadcast(m2))
-            .select(F.col("label").alias("community"), "n_members",
-                    F.expr("coalesce(int2, 0) DIV 2")
-                    .alias("internal_edges"),
-                    F.col("dc").alias("degree_sum"),
-                    # signed wire (q_c < 0 for worse-than-chance
-                    # communities): floor-snap, not round() (r10
-                    # signed-round migration; test_round_semantics.py)
-                    exact.snap_double_col(q, 9).alias("q_contrib"))
-            .orderBy(F.desc("n_members"), F.asc("community"))
-            .limit(20))
+    out = (msize.join(internal, "label", "left")
+           .join(dsum, "label")
+           .crossJoin(F.broadcast(m2))
+           .select(F.col("label").alias("community"), "n_members",
+                   F.expr("coalesce(int2, 0) DIV 2")
+                   .alias("internal_edges"),
+                   F.col("dc").alias("degree_sum"),
+                   # signed wire (q_c < 0 for worse-than-chance
+                   # communities): floor-snap, not round() (r10
+                   # signed-round migration; test_round_semantics.py)
+                   exact.snap_double_col(q, 9).alias("q_contrib"))
+           .orderBy(F.desc("n_members"), F.asc("community"))
+           .limit(20))
+    return carry_scope(out, labels)
 
 
 @query("graph_global_transitivity", oracle=f"""

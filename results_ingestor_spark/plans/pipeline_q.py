@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from results_ingestor_spark.operators.ckpt import carry_scope
 from results_ingestor_spark.plans import exact
 from results_ingestor_spark.plans.registry import query
 from results_ingestor_spark.sources.tables import load_tables
@@ -1023,11 +1024,11 @@ def sampling_cluster_aware_split(spark: SparkSession,
         "lang", "n_tokens",
         as_split(h_rep).alias("split"),
         as_split(h_self).alias("self_split"))
-    return (cls.groupBy("lang", "split")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_tokens").alias("total_tokens"),
-                 F.count_if(F.col("split") != F.col("self_split"))
-                 .alias("n_moved")))
+    return carry_scope(cls.groupBy("lang", "split")
+                       .agg(F.count("*").alias("n_docs"),
+                            F.sum("n_tokens").alias("total_tokens"),
+                            F.count_if(F.col("split") != F.col("self_split"))
+                            .alias("n_moved")), labeled)
 
 
 _BATCH = 32  # sequences per padded batch

@@ -7,6 +7,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from results_ingestor_spark.operators.ckpt import carry_scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -68,12 +70,8 @@ def _ntz_wire(df: DataFrame) -> DataFrame:
     out = df.select(*[
         F.col(f.name).cast(r).alias(f.name) if r else F.col(f.name)
         for f, r in reps])
-    # propagate the checkpoint-ownership hook (ckpt.release_result
-    # reads it off the RETURNED frame) onto the wrapping projection
-    scope = getattr(df, "_ckpt_scope", None)
-    if scope is not None:
-        out._ckpt_scope = scope
-    return out
+    # ckpt.release_result reads the hook off the RETURNED frame
+    return carry_scope(out, df)
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

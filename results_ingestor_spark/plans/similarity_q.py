@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from results_ingestor_spark.operators.similarity import (
-    brute_force_topk, lsh_bucketed_topk)
+    brute_force_topk, lsh_bucketed_topk, normed)
 from results_ingestor_spark.plans import exact
 from results_ingestor_spark.plans.registry import query
 from results_ingestor_spark.sources.tables import load_tables
@@ -1186,7 +1186,8 @@ def ann_knn_graph_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors per node) — the building block under semantic dedup,
     graph-based ANN indexes, and label propagation over embeddings.
     Candidate pairs come from the banded sign-bit LSH equi-join
-    (dedup_embedding_cosine's scale contract: the shuffle carries
+    (operators/similarity.py::knn_graph_banded over the same
+    banded_pairs as dedup_embedding_cosine: the shuffle carries
     (band_key, vec_id), vector bodies move only for candidates, and no
     all-pairs join exists); exact rounded cosine ranks candidates
     per node.  Nodes whose bands collide with nothing emit no rows —
@@ -1195,34 +1196,9 @@ def ann_knn_graph_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical budget to the dedup path plus one
     node-partitioned top-k window over the candidate lists."""
-    from results_ingestor_spark.functions.vector import cosine_similarity
-    from results_ingestor_spark.operators.similarity import bucket_expr
-    from results_ingestor_spark.sources.tables import ensure_min_parallelism
+    from results_ingestor_spark.operators.similarity import knn_graph_banded
     t = load_tables(spark, sf_dir, ("embeddings",))
-    e = ensure_min_parallelism(t["embeddings"]).select("vec_id", "embedding")
-    bkt = e.select("vec_id", bucket_expr("embedding", 64).alias("bkt"))
-    keyed = bkt.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("bidx"),
-                     F.shiftright(F.col("bkt"), 4 * j).bitwiseAND(F.lit(15))
-                     .alias("bkey"))
-            for j in range(4)])).alias("band"),
-    ).select("vec_id", "band.bidx", "band.bkey")
-    cand = (keyed.alias("l").join(keyed.alias("r"), ["bidx", "bkey"])
-            .where(F.col("l.vec_id") != F.col("r.vec_id"))
-            .select(F.col("l.vec_id").alias("src"),
-                    F.col("r.vec_id").alias("nbr"))
-            .distinct())
-    a = e.select(F.col("vec_id").alias("src"), F.col("embedding").alias("va"))
-    c = e.select(F.col("vec_id").alias("nbr"), F.col("embedding").alias("vb"))
-    scored = (cand.join(a, "src").join(c, "nbr")
-              .select("src", "nbr",
-                      exact.snap_double_col(cosine_similarity("va", "vb"), 9)
-                      .alias("cosine")))
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("nbr"))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= 3))
+    return knn_graph_banded(t["embeddings"], 64, k=3)
 
 
 @query("embedding_hubness_census", oracle=f"""
@@ -1267,6 +1243,15 @@ def embedding_hubness_census(spark: SparkSession,
             .orderBy("in_degree"))
 
 
+def _normalized_components(e: DataFrame) -> DataFrame:
+    """``(i, v)``: every component of every unit-normalized embedding,
+    each vector's norm computed once per row, not per component."""
+    return (normed(e, "embedding", "embedding", "nrm")
+            .select(F.posexplode(F.transform(
+                "embedding", lambda x: x.cast("double") / F.col("nrm")))
+                .alias("i", "v")))
+
+
 @query("embedding_isotropy_score", oracle=f"""
 WITH n AS ({_NORM_SQL}),
 flat AS (
@@ -1301,14 +1286,10 @@ def embedding_isotropy_score(spark: SparkSession,
     summation order differs at ~1e-16 relative between engines; both
     outputs are O(1)-magnitude and snapped at 6 dp (the covariance
     entry's contract)."""
-    from results_ingestor_spark.functions.vector import l2_norm
     from results_ingestor_spark.sources.tables import ensure_min_parallelism
     t = load_tables(spark, sf_dir, ("embeddings",))
     e = ensure_min_parallelism(t["embeddings"])
-    flat = (e.select((F.posexplode(F.transform(
-                "embedding", lambda x: x.cast("double") /
-                l2_norm("embedding"))))
-            .alias("i", "v")))
+    flat = _normalized_components(e)
     s = flat.groupBy("i").agg(F.sum("v").alias("sd"))
     cnt = e.agg(F.count("*").cast("long").alias("n_vecs"))
     g = (s.agg(F.sum(F.col("sd") * F.col("sd")).alias("sum_sq"))
@@ -1533,12 +1514,7 @@ def embedding_whitening_effect(spark: SparkSession,
                  "z", lambda x: x / F.col("nz"))).alias("i", "v")))
     after = (nflat.groupBy("i").agg(F.sum("v").alias("sd2"))
              .agg(F.sum(F.col("sd2") * F.col("sd2")).alias("ss_after")))
-    from results_ingestor_spark.functions.vector import l2_norm
-    bflat = e.select(F.posexplode(F.transform(
-        "embedding",
-        lambda x: x.cast("double") / l2_norm("embedding")))
-        .alias("i", "v"))
-    before = (bflat.groupBy("i").agg(F.sum("v").alias("sd2"))
+    before = (_normalized_components(e).groupBy("i").agg(F.sum("v").alias("sd2"))
               .agg(F.sum(F.col("sd2") * F.col("sd2"))
                    .alias("ss_before")))
     n = e.agg(F.count("*").cast("long").alias("n_vecs"))

@@ -36,6 +36,15 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Local-mode driver heap: 24g (tuned on a 128 GiB host), capped at
+    half the host's physical memory so smaller hosts are not overcommitted."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, phys_bytes // 2**21)}m"
+
+
 # Confs that must be set at session-build time.
 BUILD_CONFS: dict[str, str] = {
     # local[32]: one shuffle partition per core; a real cluster would use
@@ -51,7 +60,8 @@ BUILD_CONFS: dict[str, str] = {
     # at 8g vs tight 1.2x spreads at 24g — same min-statistics).  A real
     # cluster sizes executor memory separately; this knob only exists for
     # local mode.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                          default_driver_memory()),
     "spark.sql.parquet.enableVectorizedReader": "true",
     "spark.ui.enabled": "false",
 }

@@ -329,3 +329,25 @@ def test_loop_entries_match_oracle(assert_matches_oracle, name):
     oracles unroll every round, so a wrong early exit or a dropped
     round shows."""
     assert_matches_oracle(name)
+
+
+@pytest.mark.parametrize("name", [
+    "graph_sssp_frontier", "graph_sssp_weighted", "graph_k_core",
+    "graph_lpa_communities", "graph_lpa_modularity", "er_golden_record",
+    "er_candidate_records", "sampling_cluster_aware_split"])
+def test_release_result_frees_derived_entry_results(spark, sf_dir, name):
+    """Entries that return a groupBy, orderBy or join of an iterative
+    operator's checkpointed result hand the operator's scope on, so
+    release_result on the returned frame leaves no block persisted.
+    Compared as id sets: JVM GC may unpersist older frames meanwhile."""
+    from results_ingestor_spark.plans import QUERIES
+
+    def ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    base = ids()
+    df = QUERIES[name](spark, sf_dir)
+    df.collect()
+    assert ids() - base  # the result's checkpoint is persisted
+    release_result(df)
+    assert not ids() - base

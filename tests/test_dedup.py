@@ -122,9 +122,9 @@ def test_semantic_dedup_invariants(spark, sf_dir):
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
-    from results_ingestor_spark.functions.vector import cosine_similarity
+    from results_ingestor_spark.functions.vector import cosine
     from results_ingestor_spark.operators.similarity import (
-        assign_centroid_expr, kmeans_centroids)
+        assign_centroid_expr, kmeans_centroids, normed)
     from results_ingestor_spark.sources.tables import load_tables
 
     res = entry.queries()["dedup_semantic_clusters"](spark, sf_dir)
@@ -137,16 +137,15 @@ def test_semantic_dedup_invariants(spark, sf_dir):
 
     import math
     cents = kmeans_centroids(e, n_clusters=max(2, math.isqrt(n)), n_iter=2)
-    assigned = e.select(
-        "vec_id", "embedding",
-        assign_centroid_expr(cents, "embedding").alias("cid"))
+    assigned = normed(e, "embedding", "embedding", "nrm", "vec_id",
+                      assign_centroid_expr(cents, "embedding").alias("cid"))
     a = assigned.select("cid", F.col("vec_id").alias("id_a"),
-                        F.col("embedding").alias("va"))
+                        F.col("embedding").alias("va"), F.col("nrm").alias("na"))
     b = assigned.select("cid", F.col("vec_id").alias("id_b"),
-                        F.col("embedding").alias("vb"))
+                        F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
     dropped = (a.join(b, "cid")
                .where(F.col("id_a") < F.col("id_b"))
-               .where(F.round(cosine_similarity("va", "vb"), 9) >= 0.35)
+               .where(F.round(cosine("va", "na", "vb", "nb"), 9) >= 0.35)
                .groupBy("cid").agg(F.count_distinct("id_b").alias("nd")))
     recomputed = {r["cid"]: r["nd"] for r in dropped.collect()}
     assert {r["cid"]: r["n_dropped"] for r in rows if r["n_dropped"]} \

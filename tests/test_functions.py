@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from results_ingestor_spark.functions.agg import pg_string_agg_distinct
 from results_ingestor_spark.functions.hashing import md5_long
-from results_ingestor_spark.functions.vector import cosine_similarity
+from results_ingestor_spark.functions.vector import cosine, l2_norm
 from results_ingestor_spark.plans.oracles import md5_long_sql, sad
 
 
@@ -40,7 +40,8 @@ def test_cosine_similarity(spark):
     sdf = spark.createDataFrame(
         [([1.0, 0.0], [1.0, 1.0]), ([1.0, 2.0], [2.0, 4.0]), ([0.0, 0.0], [1.0, 0.0])],
         ["a", "b"])
-    got = [r["c"] for r in sdf.select(cosine_similarity("a", "b").alias("c")).collect()]
+    normed = sdf.select("a", l2_norm("a").alias("na"), "b", l2_norm("b").alias("nb"))
+    got = [r["c"] for r in normed.select(cosine("a", "na", "b", "nb").alias("c")).collect()]
     assert abs(got[0] - 0.7071067811865475) < 1e-12
     assert abs(got[1] - 1.0) < 1e-12
     assert got[2] is None  # zero-norm → NULL

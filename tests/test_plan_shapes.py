@@ -758,3 +758,30 @@ def test_time_decay_attribution_no_cartesian(plans):
     p = plans("attribution_time_decay")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
+
+
+@pytest.mark.parametrize("name", [
+    "ann_cosine_topk", "dedup_embedding_cosine", "ann_maxsim_topk"])
+def test_pair_cosine_norms_evaluated_below_pair_join(spark, sf_dir, name):
+    """Norms are computed once per vector: in the optimized plan every
+    node that evaluates a sqrt (the L2 norm) has no join beneath it, so
+    no norm is evaluated per pair."""
+    plan = entry.queries()[name](spark, sf_dir)._jdf.queryExecution() \
+        .optimizedPlan()
+
+    def children(node):
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def has_join(node):
+        return node.nodeName() == "Join" or any(map(has_join, children(node)))
+
+    norm_nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        stack.extend(children(node))
+        if "sqrt(" in node.expressions().toString().lower():
+            norm_nodes.append(node)
+    assert norm_nodes
+    for node in norm_nodes:
+        assert not has_join(node), node.simpleString(200)

@@ -259,3 +259,16 @@ def test_assign_centroids_plan_size_constant_in_k(spark, emb):
     assert "BroadcastNestedLoopJoin" in plan  # 1-row build side
     # and the build side is data (a local/RDD scan), not folded literals
     assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
+
+
+@pytest.mark.parametrize("name", [
+    "ann_cosine_topk", "ann_lsh_topk", "ann_ivf_topk",
+    "ann_ivf_tuning_curve", "ann_maxsim_topk", "dedup_embedding_cosine",
+    "ann_knn_graph_banded", "embedding_hubness_census",
+    "embedding_isotropy_score", "embedding_whitening_effect",
+    "dedup_semantic_clusters", "search_rrf_hybrid"])
+def test_vector_entries_match_oracle(assert_matches_oracle, name):
+    """The entries on the one cosine path (norm-carrying relations,
+    the shared top-k tail, IVF probe and banded candidate generator)
+    equal their DuckDB oracles cell-for-cell."""
+    assert_matches_oracle(name)

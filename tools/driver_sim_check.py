@@ -84,6 +84,7 @@ def _run_zone(zone: str, sf_dir: str, names: list[str]) -> int:
     from tools.check_correctness import _rowset
     from results_ingestor_spark.sources.tables import TABLE_NAMES
     from results_ingestor_spark.operators.ckpt import release_result
+    from results_ingestor_spark.session import BUILD_CONFS
 
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.session.timeZone", zone)
@@ -91,7 +92,7 @@ def _run_zone(zone: str, sf_dir: str, names: list[str]) -> int:
                      f"-Duser.timezone={zone}")
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+                     BUILD_CONFS["spark.driver.memory"])
              .config("spark.ui.enabled", "false")
              .appName(f"driver-sim-{zone}").getOrCreate())
 
