@@ -39,22 +39,27 @@ def subvector(vec_col: str, j: int, sub_dim: int) -> F.Column:
 def codebook_relation(spark, books: Books) -> DataFrame:
     """ALL codebooks as ONE broadcast row —
     ``__books array<array<struct<code:int,c:array<double>>>>``, book
-    ``g`` at ``element_at(__books, g + 1)``.
+    ``g`` at ``element_at(__books, g + 1)``, entry ``i`` as ``code = i``
+    — the one way a vector constant (codebooks, centroids, LSH planes)
+    enters a plan.  Callers ``crossJoin`` it.
 
-    Centroids travel as data on the broadcast wire (as MLlib ships its
+    Constants travel as data on the broadcast wire (as MLlib ships its
     centroid matrix), not as plan literals: the plan stays O(1) in
     m·k·d and every Lloyd iteration reuses the same generated class.
     The literal form (m=16, k=32: ~2,500 literal leaves per plan) cost
     thousands of py4j round-trips and a fresh Janino compile per
     iteration; measured same-session alternating at sf0.1, 16x32:
     trainer 4.52 -> 1.66 s, encode 4.25 -> 2.07 s, with books and
-    encode rows identical (bench_runs/r12_probes.md).  Callers
-    ``crossJoin`` it — a 1-row build side is the plan-lint whitelisted
-    BroadcastNestedLoopJoin shape."""
-    data = [([[(i, list(map(float, c))) for i, c in enumerate(cb)]
-              for cb in books],)]
-    return F.broadcast(spark.createDataFrame(
-        data, "__books array<array<struct<code:int,c:array<double>>>>"))
+    encode rows identical (bench_runs/r12_probes.md).  Built from a
+    pyarrow Table, the row is a driver-local ``LocalTableScan`` whose
+    broadcast runs no Spark job (Python rows would be a
+    ``Scan ExistingRDD``: a Python-worker job per broadcast)."""
+    import pyarrow as pa
+    entry = pa.struct([("code", pa.int32()), ("c", pa.list_(pa.float64()))])
+    col = pa.array([[[{"code": i, "c": [float(x) for x in c]}
+                      for i, c in enumerate(cb)] for cb in books]],
+                   type=pa.list_(pa.list_(entry)))
+    return F.broadcast(spark.createDataFrame(pa.table({"__books": col})))
 
 
 def _dist2(a: F.Column, b: F.Column) -> F.Column:

@@ -16,6 +16,9 @@ expression evaluates a norm, and the output is bit-identical to
 folding both norms per pair (argument in functions/vector.py).  Around
 the score there is one top-k tail (``_top_k``), one IVF probe body
 (``_ivf_search``) and one banded candidate generator (``banded_pairs``).
+Every vector constant (LSH hyperplanes, k-means and IVF centroids)
+rides the one-row constants relation ``quantization.codebook_relation``
+cross-joined onto the vectors; none is folded into the plan as literals.
 
 At 100 TB: both paths broadcast the (small) query set; the LSH path
 additionally prunes candidates by bucket before any dot product, cutting
@@ -52,15 +55,29 @@ def hyperplanes(dim: int) -> list[list[float]]:
     return [[_plane_component(j, d) for d in range(dim)] for j in range(N_PLANES)]
 
 
-def bucket_expr(vec_col: str, dim: int) -> F.Column:
-    """Sign-bit bucket id: bit j set iff dot(vec, plane_j) > 0."""
-    planes = hyperplanes(dim)
-    bits = None
-    for j, plane in enumerate(planes):
-        side = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
-        bit = F.when(side > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bits = bit if bits is None else bits + bit
-    return bits.cast("int")
+def _with_book(df: DataFrame, book: list[list[float]], out_col: str,
+               fold) -> DataFrame:
+    """Add ``out_col`` = ``fold(book)`` per row, the book (entry ``i``
+    as ``code = i``) on the one-row ``codebook_relation`` crossJoined
+    onto ``df``."""
+    return (df.crossJoin(codebook_relation(df.sparkSession, [book]))
+            .withColumn(out_col, fold(F.element_at(F.col("__books"), 1)))
+            .drop("__books"))
+
+
+def bucketed(df: DataFrame, vec_col: str, dim: int, out_col: str) -> DataFrame:
+    """Add ``out_col``, the sign-bit bucket id: bit j set iff
+    dot(vec, plane_j) > 0, one fold over the planes book.  ``dot`` is
+    the sequential fold the oracle twin
+    (plans/similarity_q.py::_lsh_bucket_sql) replays, and the weights
+    2^j < 2^16 are exact ints, so every bucket is bit-exact."""
+    def bit(acc, p):
+        side = dot(F.col(vec_col), p["c"])
+        return acc + F.when(side > 0, F.pow(F.lit(2), p["code"]).cast("int")
+                            ).otherwise(F.lit(0))
+
+    return _with_book(df, hyperplanes(dim), out_col,
+                      lambda book: F.aggregate(book, F.lit(0), bit))
 
 
 def normed(df: DataFrame, vec_col: str, vec_as: str, nrm_as: str,
@@ -112,11 +129,11 @@ def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, dim: int,
     """Approximate top-k: prefilter candidates to buckets within
     ``max_hamming`` sign-bit flips of the query's bucket, then exact
     cosine + window top-k on the survivors."""
-    bq = normed(queries, vec_col, "qvec", "qn", F.col(id_col).alias("query_id"),
-                bucket_expr(vec_col, dim).alias("qbucket"))
-    bc = normed(ensure_min_parallelism(vectors), vec_col, "cvec", "cn",
-                F.col(id_col).alias("cand_id"),
-                bucket_expr(vec_col, dim).alias("cbucket"))
+    bq = normed(bucketed(queries, vec_col, dim, "qbucket"), vec_col, "qvec",
+                "qn", F.col(id_col).alias("query_id"), "qbucket")
+    bc = normed(bucketed(ensure_min_parallelism(vectors), vec_col, dim,
+                         "cbucket"), vec_col, "cvec", "cn",
+                F.col(id_col).alias("cand_id"), "cbucket")
     cand = (bc.join(F.broadcast(bq),
                     (F.col("query_id") != F.col("cand_id"))
                     & (F.bit_count(F.col("qbucket").bitwiseXOR(F.col("cbucket")))
@@ -128,7 +145,7 @@ def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, dim: int,
 def banded_pairs(vectors: DataFrame, dim: int, a: str, b: str,
                  ordered: bool) -> DataFrame:
     """Banded sign-bit LSH candidate pairs ``(a, b, cosine)`` of the
-    ``vec_id``/``embedding`` rows: the 16 ``bucket_expr`` bits split
+    ``vec_id``/``embedding`` rows: the 16 ``bucketed`` bits split
     into 4 bands of 4; a pair is a candidate iff it collides on ANY band
     (OR across bands lifts recall the way single-bucket equality
     cannot), and exact cosine (9 dp) scores each candidate once.
@@ -137,8 +154,7 @@ def banded_pairs(vectors: DataFrame, dim: int, a: str, b: str,
     carries (band key, id), vector bodies move only for candidate ids,
     and no all-pairs join exists."""
     e = ensure_min_parallelism(vectors).select("vec_id", "embedding")
-    bkt = e.select("vec_id", bucket_expr("embedding", dim).alias("bkt"))
-    keyed = bkt.select(
+    keyed = bucketed(e, "embedding", dim, "bkt").select(
         "vec_id",
         F.explode(F.array(*[
             F.struct(F.lit(j).alias("bidx"),
@@ -230,20 +246,6 @@ def _argmax_fold(book: F.Column, vec: F.Column) -> F.Column:
     return F.aggregate(book, init, merge)["code"]
 
 
-def assign_centroid_expr(centroids: list[list[float]], vec_col: str) -> F.Column:
-    """Argmax-cosine centroid assignment as ONE JVM expression with the
-    centroid matrix folded as PLAN LITERALS — zero joins, zero extra
-    operators.  Right for small FIXED k (the IVF coarse quantizers);
-    for corpus-derived k (the SemDeDup k=isqrt(n) contract) use
-    ``assign_centroids``, which keeps the plan O(1) in k (at 100 TB,
-    k≈10⁴-10⁵ literal vectors make the expression tree the bottleneck)."""
-    book = F.array(*[
-        F.struct(F.lit(i).alias("code"),
-                 F.array(*[F.lit(x) for x in c]).alias("c"))
-        for i, c in enumerate(_l2_normalized(centroids))])
-    return _argmax_fold(book, F.col(vec_col))
-
-
 def assign_centroids(df: DataFrame, centroids: list[list[float]],
                      vec_col: str, out_col: str = "cid") -> DataFrame:
     """Add ``out_col`` = argmax-cosine centroid id, with the normalized
@@ -253,14 +255,11 @@ def assign_centroids(df: DataFrame, centroids: list[list[float]],
     expression-tree literals) cross-joined onto the input.  Plan size
     is O(1) in k; no row explosion, no aggregation, no shuffle — a
     BroadcastNestedLoopJoin against one row is a per-partition map
-    (whitelisted shape in tools/plan_lint.py: 1-row build side).  The
-    fold is ``assign_centroid_expr``'s, so both give cell-for-cell the
-    same ids (pinned in tests/test_similarity.py)."""
-    books = codebook_relation(df.sparkSession, [_l2_normalized(centroids)])
-    return (df.crossJoin(books)
-            .withColumn(out_col, _argmax_fold(
-                F.element_at(F.col("__books"), 1), F.col(vec_col)))
-            .drop("__books"))
+    (recognised by shape in tools/plan_lint.py: the constants relation
+    is its build side).  Checked against a NumPy argmax reference in
+    tests/test_similarity.py."""
+    return _with_book(df, _l2_normalized(centroids), out_col,
+                      lambda book: _argmax_fold(book, F.col(vec_col)))
 
 
 def kmeans_centroids(vectors: DataFrame, n_clusters: int = 10,
@@ -279,9 +278,7 @@ def kmeans_centroids(vectors: DataFrame, n_clusters: int = 10,
     vectors) plus one (code, pos) aggregation whose output is k x dim
     doubles.  Only the centroids (k x dim) ever reach the driver, same
     as Spark MLlib's own KMeans; an empty cluster keeps its previous
-    centroid.  The broadcast row, not a literal fold, even for small
-    k: the centroids change every iteration, so literals would rebuild
-    a k x dim expression tree and compile fresh codegen per iteration."""
+    centroid."""
     view = vectors.select(F.lit(0).alias("grp"), F.col(id_col).alias("vid"),
                           F.col(vec_col).cast("array<double>").alias("v"))
     return lloyd_train(view, 1, n_clusters, n_iter, _argmax_fold,
@@ -293,26 +290,28 @@ def ivf_topk_kmeans(vectors: DataFrame, queries: DataFrame, k: int = 10,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     ) -> DataFrame:
     """IVF approximate top-k with a LABEL-FREE coarse quantizer: k-means
-    centroids (kmeans_centroids), candidates assigned by the same argmax
-    expression, queries probe their ``nprobe`` nearest centroid lists.
+    centroids (kmeans_centroids), candidates assigned by
+    ``assign_centroids`` (the trainer's argmax fold), queries probe
+    their ``nprobe`` nearest centroid lists.
     At scale the assigned table is written partitioned by centroid_id so
     probes are partition-pruned scans."""
     cents_list = kmeans_centroids(vectors, n_clusters, n_iter, id_col, vec_col)
-    cents = vectors.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents_list)],
-        "centroid_id int, centroid array<double>")
-    return _ivf_search(vectors, queries, cents,
-                       assign_centroid_expr(cents_list, vec_col),
-                       k, nprobe, id_col, vec_col)
+    cents = (codebook_relation(vectors.sparkSession, [cents_list])
+             .select(F.inline(F.element_at(F.col("__books"), 1)))
+             .select(F.col("code").alias("centroid_id"),
+                     F.col("c").alias("centroid")))
+    cands = assign_centroids(ensure_min_parallelism(vectors), cents_list,
+                             vec_col, "centroid_id")
+    return _ivf_search(cands, queries, cents, k, nprobe, id_col, vec_col)
 
 
-def _ivf_search(vectors: DataFrame, queries: DataFrame, cents: DataFrame,
-                list_id, k: int, nprobe: int, id_col: str,
-                vec_col: str) -> DataFrame:
+def _ivf_search(cands: DataFrame, queries: DataFrame, cents: DataFrame,
+                k: int, nprobe: int, id_col: str, vec_col: str) -> DataFrame:
     """The IVF probe body both variants share: rank the
     ``(centroid_id, centroid)`` lists per query by cosine (ties to the
     lowest id), keep ``nprobe``, then exact cosine top-k over the
-    candidates whose ``list_id`` is a probed list."""
+    candidates (``cands``, carrying their list id as ``centroid_id``)
+    in a probed list."""
     q = normed(queries, vec_col, "qvec", "qn", F.col(id_col).alias("query_id"))
     qc = (q.join(F.broadcast(normed(cents, "centroid", "centroid", "cnrm",
                                     "centroid_id")))
@@ -320,8 +319,8 @@ def _ivf_search(vectors: DataFrame, queries: DataFrame, cents: DataFrame,
                   cosine("qvec", "qn", "centroid", "cnrm").alias("csim")))
     probes = (_top_k(qc, "query_id", "csim", "centroid_id", nprobe)
               .select("query_id", "qvec", "qn", "centroid_id"))
-    cand = normed(ensure_min_parallelism(vectors), vec_col, "cvec", "cn",
-                  F.col(id_col).alias("cand_id"), list_id.alias("centroid_id"))
+    cand = normed(cands, vec_col, "cvec", "cn",
+                  F.col(id_col).alias("cand_id"), "centroid_id")
     sims = (cand.join(F.broadcast(probes), "centroid_id")
             .where(F.col("query_id") != F.col("cand_id"))
             .select("query_id", "cand_id",
@@ -354,9 +353,11 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     written partitioned by centroid_id, so a probe reads nprobe/N of the
     corpus — candidate pruning happens at the storage layer, not the
     scan."""
-    return _ivf_search(vectors, queries,
+    cands = ensure_min_parallelism(vectors).withColumn(
+        "centroid_id", F.col(label_col))
+    return _ivf_search(cands, queries,
                        label_centroids(vectors, id_col, vec_col, label_col),
-                       F.col(label_col), k, nprobe, id_col, vec_col)
+                       k, nprobe, id_col, vec_col)
 
 
 def mmr_rerank(vectors: DataFrame, queries: DataFrame, k: int = 10,

@@ -398,7 +398,7 @@ def _semantic_kmeans_oracle(k: int | str = _K_SQRT_N, n_iter: int = 2,
     Replays, in unrolled CTEs: (1) seeding = the k vectors with the
     smallest (md5(vec_id), vec_id) — pure md5, engine-portable; (2) each
     Lloyd iteration as argmax-dot assignment against the prior
-    centroids (normalized first, like assign_centroid_expr; ties →
+    centroids (normalized first, like assign_centroids; ties →
     lowest cid via ORDER BY dot DESC, cid) followed by an exact
     per-position mean with empty clusters keeping their previous
     centroid; (3) the final within-cluster pair join with CAST(floor((cos) * 1000000000.0 + 0.5) AS BIGINT) / CAST(1000000000.0 AS DOUBLE)

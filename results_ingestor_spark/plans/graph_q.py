@@ -513,9 +513,10 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles.  Top-100 by (lcc, degree, node) — a unique ordering.
 
     Scale: the weight threshold is the blocking knob that bounds the
-    wedge join (Σ deg² on the sparse graph); at larger scale the
-    degree-ordered orientation bounds fan-out by arboricity with the
-    identical plan shape.  Output is TakeOrdered — no global sort."""
+    wedge join (Σ deg² on the sparse graph).  Degree-ordered
+    orientation was measured on the global census and does not pay on
+    this uniform co-purchase graph (operators/graph.py::triangle_count).
+    Output is TakeOrdered — no global sort."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     es = copurchase_edges(li, min_weight=2).select("u", "v")
     deg = degrees(es).withColumnRenamed("u", "node") \

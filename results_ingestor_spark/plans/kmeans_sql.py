@@ -38,7 +38,7 @@ def kmeans_ctes(k: int | str, n_iter: int) -> str:
     is only interpolated into the seeding LIMIT, which DuckDB accepts
     as an expression.
     ``cent0``..``cent{n_iter}`` (centroids per iteration), ``normf``
-    (final centroids L2-normalized, the assign_centroid_expr operand).
+    (final centroids L2-normalized, the assign_centroids operand).
     Callers append their own search/verify CTEs."""
     parts = [f"""v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v

@@ -42,7 +42,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_bucket_sql(dim: int = 64) -> str:
-    """DuckDB twin of operators/similarity.py::bucket_expr — the
+    """DuckDB twin of operators/similarity.py::bucketed — the
     hyperplane components are md5-derived constants, so the oracle embeds
     the SAME literals and replays the sign-bit bucketing bit-for-bit.
     Term order matches Spark's left fold exactly (same double sums)."""
@@ -1126,11 +1126,11 @@ def ann_ivf_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a k-bounded hash agg; the 1-row moment broadcast is the
     whitelisted scalar-combine shape."""
     from results_ingestor_spark.operators.similarity import (
-        assign_centroid_expr, kmeans_centroids)
+        assign_centroids, kmeans_centroids)
     t = load_tables(spark, sf_dir, ("embeddings",))
     e = t["embeddings"]
     cents = kmeans_centroids(e, n_clusters=10, n_iter=3)
-    asg = e.select(assign_centroid_expr(cents, "embedding").alias("cid"))
+    asg = assign_centroids(e, cents, "embedding", "cid").select("cid")
     sizes = asg.groupBy("cid").agg(F.count("*").alias("nv"))
     allc = (spark.range(len(cents))
             .select(F.col("id").cast("int").alias("cid"))

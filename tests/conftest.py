@@ -24,6 +24,28 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def jobs_run(spark):
+    """``jobs_run(fn)`` -> (fn's result, number of Spark jobs fn ran),
+    counted in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-run-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def assert_matches_oracle(spark, sf_dir):
     """Check one registry entry against its DuckDB oracle cell-for-cell:
     tools/check_correctness.py's exact, type-tagged, order-insensitive

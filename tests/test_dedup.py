@@ -124,7 +124,7 @@ def test_semantic_dedup_invariants(spark, sf_dir):
     import __spark_entry__ as entry
     from results_ingestor_spark.functions.vector import cosine
     from results_ingestor_spark.operators.similarity import (
-        assign_centroid_expr, kmeans_centroids, normed)
+        assign_centroids, kmeans_centroids, normed)
     from results_ingestor_spark.sources.tables import load_tables
 
     res = entry.queries()["dedup_semantic_clusters"](spark, sf_dir)
@@ -137,8 +137,8 @@ def test_semantic_dedup_invariants(spark, sf_dir):
 
     import math
     cents = kmeans_centroids(e, n_clusters=max(2, math.isqrt(n)), n_iter=2)
-    assigned = normed(e, "embedding", "embedding", "nrm", "vec_id",
-                      assign_centroid_expr(cents, "embedding").alias("cid"))
+    assigned = normed(assign_centroids(e, cents, "embedding", "cid"),
+                      "embedding", "embedding", "nrm", "vec_id", "cid")
     a = assigned.select("cid", F.col("vec_id").alias("id_a"),
                         F.col("embedding").alias("va"), F.col("nrm").alias("na"))
     b = assigned.select("cid", F.col("vec_id").alias("id_b"),

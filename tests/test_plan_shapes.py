@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry
+from tools.plan_lint import bnlj_beyond_constants
 
 
 @pytest.fixture(scope="module")
@@ -126,18 +127,21 @@ def test_greedy_pack_python_is_per_shard_arrow(plans):
 
 
 def test_ivf_assignment_no_join_for_candidates(spark, sf_dir):
-    """Candidate->centroid assignment is a fold over literal centroids:
-    the plan must contain no Python eval and the assignment itself adds
-    no join (the only joins are the tiny probe/candidate equi-joins)."""
-    from pyspark.sql import functions as F
+    """Candidate->centroid assignment is a fold over the one-row
+    centroid relation: no Python eval, no shuffle exchange, no
+    cartesian, and the only join is the crossJoin onto that relation
+    (its BroadcastExchange is the one exchange)."""
     from results_ingestor_spark.operators.similarity import (
-        assign_centroid_expr, kmeans_centroids)
+        assign_centroids, kmeans_centroids)
     from results_ingestor_spark.sources.tables import load_tables
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     cents = kmeans_centroids(e, n_clusters=4, n_iter=1)
-    assigned = e.select(assign_centroid_expr(cents, "embedding").alias("cid"))
+    assigned = assign_centroids(e, cents, "embedding", "cid").select("cid")
     p = assigned._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in p and "Exchange" not in p
+    assert p.count("Join") == p.count("BroadcastNestedLoopJoin") == 1
+    assert not bnlj_beyond_constants(p)
+    assert p.count("Exchange") == p.count("BroadcastExchange") == 1
+    assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
@@ -341,12 +345,13 @@ def test_jl_projection_no_shuffle_no_python(plans):
 
 def test_embedding_cosine_dedup_no_all_pairs(plans):
     """dedup_embedding_cosine must candidate-generate via the banded
-    sign-bit equi-join, never an all-pairs theta join: no nested-loop /
-    cartesian operator anywhere in the plan, and the verify stage's
+    sign-bit equi-join, never an all-pairs theta join: no cartesian
+    operator, no nested-loop join beyond the crossJoins onto the
+    one-row hyperplane relation, and the verify stage's
     SortMergeJoin/ShuffledHashJoin keys are ids, not inequalities."""
     p = plans("dedup_embedding_cosine")
     assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
+    assert not bnlj_beyond_constants(p)
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 

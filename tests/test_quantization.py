@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from results_ingestor_spark.operators.quantization import (
-    pq_encode, pq_train, subvector)
+    codebook_relation, pq_encode, pq_train, subvector)
 from results_ingestor_spark.sources.tables import load_tables
 
 
@@ -24,6 +24,21 @@ def test_codebook_shape(books):
     assert len(books) == 8
     assert all(len(b) == 16 for b in books)
     assert all(len(c) == 8 for b in books for c in b)
+
+
+def test_codebook_relation_is_local_and_runs_no_job(spark, books, jobs_run):
+    """The constants relation is a driver-local scan: collecting it
+    (and so broadcasting it) runs no Spark job, and it carries the
+    books exactly, entry ``i`` of each book as ``code = i``."""
+    rel = codebook_relation(spark, books)
+    plan = rel._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan [__books" in plan
+    assert "ExistingRDD" not in plan
+    rows, jobs = jobs_run(rel.collect)
+    assert jobs == 0
+    assert [[(e["code"], list(e["c"])) for e in b]
+            for b in rows[0]["__books"]] \
+        == [list(enumerate(map(list, b))) for b in books]
 
 
 def test_train_deterministic(emb, books):

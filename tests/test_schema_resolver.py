@@ -19,20 +19,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PINNED = os.path.join(ROOT, "perfbench", "data", "sf0.01")
 
 
-def _jobs_run(spark, fn):
-    """(fn's result, number of Spark jobs fn ran), counted in a job group."""
-    sc = spark.sparkContext
-    group = f"resolver-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _fresh_alias(tmp_path, sf_dir):
     """A new path to ``sf_dir``, so load_tables misses its cache."""
     alias = tmp_path / f"alias-{uuid.uuid4().hex[:8]}"
@@ -92,12 +78,12 @@ def test_load_tables_in_non_utc_external_session(spark, sf_dir, tmp_path):
         assert loaded[t].schema == inferred.schema, t
 
 
-def test_load_tables_runs_no_job(spark, sf_dir, tmp_path):
+def test_load_tables_runs_no_job(spark, sf_dir, tmp_path, jobs_run):
     path = os.path.join(sf_dir, "orders.parquet")
-    _, inferring = _jobs_run(spark, lambda: spark.read.parquet(path))
+    _, inferring = jobs_run(lambda: spark.read.parquet(path))
     assert inferring >= 1  # the counter sees the inference job it replaced
-    loaded, jobs = _jobs_run(
-        spark, lambda: load_tables(spark, _fresh_alias(tmp_path, sf_dir)))
+    loaded, jobs = jobs_run(
+        lambda: load_tables(spark, _fresh_alias(tmp_path, sf_dir)))
     assert jobs == 0
     assert sorted(loaded) == sorted(TABLE_NAMES)
 
@@ -145,7 +131,7 @@ def test_csv_columns_align_by_name_across_header_orders(spark, tmp_path):
         assert got == {("WAKE", "10"), ("DURHAM", "20")}, infer
 
 
-def test_csv_ingest_build_runs_no_job(spark, tmp_path):
+def test_csv_ingest_build_runs_no_job(spark, tmp_path, jobs_run):
     """The untyped ingest build (the benchmark's csv_ingest: no district
     column, so extraction needs no trigger probe) runs no Spark job."""
     from results_ingestor_spark.operators.ingest import ingest_result_files
@@ -155,7 +141,6 @@ def test_csv_ingest_build_runs_no_job(spark, tmp_path):
     for i in range(2):
         (tmp_path / f"part-{i}.csv").write_text(
             header + f"US SENATE,WAKE,P{i},Smith,DEM,1,2,3,0,6,1\n")
-    df, jobs = _jobs_run(spark,
-                         lambda: ingest_result_files(spark, str(tmp_path)))
+    df, jobs = jobs_run(lambda: ingest_result_files(spark, str(tmp_path)))
     assert jobs == 0
     assert df.count() == 2
