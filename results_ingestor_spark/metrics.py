@@ -71,3 +71,12 @@ def execution_metrics(df: DataFrame,
             if num is not None:
                 out[m.name()] = out.get(m.name(), 0.0) + num
     return out
+
+
+def codegen_compiles(spark) -> int:
+    """Janino compiles this JVM has run so far, across every session —
+    the exact count of ``CodegenMetrics``' compilation-time histogram.
+    The delta over a pass is the number of generated classes that missed
+    Spark's codegen cache (``session.CODEGEN_CACHE_ENTRIES``)."""
+    return int(spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from results_ingestor_spark.sources.tables import local_relation
+
 
 def gram_partials(emb: DataFrame, col: str = "embedding",
                   d: int = 64) -> DataFrame:
@@ -105,10 +107,10 @@ def pca_explained_variance(emb: DataFrame, col: str = "embedding",
             round(float(w[i] / total), 6),
             round(float(w[: i + 1].sum() / total), 6))
            for i in range(k)]
-    spark = emb.sparkSession
-    return spark.createDataFrame(
-        out, "component int, eigenvalue double, explained_ratio double, "
-             "cumulative_ratio double")
+    return local_relation(
+        emb.sparkSession, out,
+        "component int, eigenvalue double, explained_ratio double, "
+        "cumulative_ratio double")
 
 
 def mahalanobis_scores(emb: DataFrame, id_col: str = "vec_id",

@@ -26,6 +26,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from results_ingestor_spark.sources.tables import local_relation
+
 Books = list[list[list[float]]]
 
 
@@ -50,16 +52,13 @@ def codebook_relation(spark, books: Books) -> DataFrame:
     thousands of py4j round-trips and a fresh Janino compile per
     iteration; measured same-session alternating at sf0.1, 16x32:
     trainer 4.52 -> 1.66 s, encode 4.25 -> 2.07 s, with books and
-    encode rows identical (bench_runs/r12_probes.md).  Built from a
-    pyarrow Table, the row is a driver-local ``LocalTableScan`` whose
-    broadcast runs no Spark job (Python rows would be a
-    ``Scan ExistingRDD``: a Python-worker job per broadcast)."""
-    import pyarrow as pa
-    entry = pa.struct([("code", pa.int32()), ("c", pa.list_(pa.float64()))])
-    col = pa.array([[[{"code": i, "c": [float(x) for x in c]}
-                      for i, c in enumerate(cb)] for cb in books]],
-                   type=pa.list_(pa.list_(entry)))
-    return F.broadcast(spark.createDataFrame(pa.table({"__books": col})))
+    encode rows identical (bench_runs/r12_probes.md).  The row is a
+    ``sources.tables.local_relation``: driver-local, so its broadcast
+    runs no Spark job."""
+    rows = [([[(i, [float(x) for x in c]) for i, c in enumerate(cb)]
+              for cb in books],)]
+    return F.broadcast(local_relation(
+        spark, rows, "__books array<array<struct<code:int,c:array<double>>>>"))
 
 
 def _dist2(a: F.Column, b: F.Column) -> F.Column:

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 from results_ingestor_spark.functions.vector import cosine, dot, l2_norm
 from results_ingestor_spark.operators.quantization import (
     codebook_relation, lloyd_train)
-from results_ingestor_spark.sources.tables import ensure_min_parallelism
+from results_ingestor_spark.sources.tables import (
+    ensure_min_parallelism, local_relation)
 
 N_PLANES = 16
 _PLANE_MOD = 2001  # component ∈ [-1, 1] in steps of 1e-3
@@ -413,7 +414,7 @@ def mmr_rerank(vectors: DataFrame, queries: DataFrame, k: int = 10,
                         / 1e9,
                         _math.floor(float(best_score) * 1e9 + 0.5)
                         / 1e9))
-    spark = vectors.sparkSession
-    return spark.createDataFrame(
-        out, "query_id long, cand_id long, mmr_rank int, "
-             "cosine double, mmr_score double")
+    return local_relation(
+        vectors.sparkSession, out,
+        "query_id long, cand_id long, mmr_rank int, "
+        "cosine double, mmr_score double")

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from results_ingestor_spark.sources.tables import local_relation
+
 _MAX_PIECE_LEN = 6
 
 
@@ -171,8 +173,8 @@ def train_unigram_lm(docs: DataFrame, text_col: str = "text",
 
     scope.release_all_except()
     rows = sorted(logp.items(), key=lambda kv: (-kv[1], kv[0]))
-    vocab = spark.createDataFrame(
-        [(p, round(lp, 9), i) for i, (p, lp) in enumerate(rows)],
+    vocab = local_relation(
+        spark, [(p, round(lp, 9), i) for i, (p, lp) in enumerate(rows)],
         "piece string, logprob double, rank int")
     return vocab, lls
 

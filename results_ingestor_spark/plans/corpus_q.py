@@ -19,7 +19,7 @@ from results_ingestor_spark.operators.bpe import train_bpe_merges
 from results_ingestor_spark.operators.ckpt import carry_scope
 from results_ingestor_spark.plans import exact
 from results_ingestor_spark.plans.registry import query
-from results_ingestor_spark.sources.tables import load_tables
+from results_ingestor_spark.sources.tables import load_tables, local_relation
 
 _TOKS = "string_split(text, ' ')"
 
@@ -297,7 +297,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             for h in hist]
     schema = ("iteration long, loss double, "
               + ", ".join(f"w{j} double" for j in range(_N_FEAT)))
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 def _score_oracle() -> str:

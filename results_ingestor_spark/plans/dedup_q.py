@@ -17,7 +17,7 @@ from results_ingestor_spark.operators.dedup import (
     simhash32, with_minhash)
 from results_ingestor_spark.plans import exact
 from results_ingestor_spark.plans.registry import query
-from results_ingestor_spark.sources.tables import load_tables
+from results_ingestor_spark.sources.tables import load_tables, local_relation
 
 _TOKS = "string_split(text, ' ')"
 # DuckDB twin of operators/text.py::shingles_expr (n=3); corpus docs all
@@ -1111,8 +1111,8 @@ def dedup_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines, snapped at 9); no table scan — the one entry
     whose input is the DESIGN SPACE, not the corpus (sf_dir unused,
     accepted for the uniform entry signature)."""
-    cfg = spark.createDataFrame(list(_SCURVE_CONFIGS), "b int, r int")
-    s = spark.createDataFrame([(x,) for x in _SCURVE_GRID], "sim double")
+    cfg = local_relation(spark, _SCURVE_CONFIGS, "b int, r int")
+    s = local_relation(spark, [(x,) for x in _SCURVE_GRID], "sim double")
     curve = (cfg.crossJoin(F.broadcast(s))
              .select("b", "r", "sim",
                      exact.snap_double_col(1.0 - F.pow(1.0 - F.pow("sim", F.col("r")), F.col("b")), 9)

@@ -12,6 +12,16 @@ scaled down for local[32] testing:
 * Arrow enabled for the few Pandas-UDF extension operators.
 * Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (duckdb timestamps are UTC-naive).
+* Spark's generated-class cache sized to the registry's working set
+  (``CODEGEN_CACHE_ENTRIES``).  Whole-stage codegen only pays off when a
+  compiled class is reused, and the engine is a registry one long-lived
+  session runs again and again.  Spark keeps compiled classes in one
+  JVM-wide LRU of ``spark.sql.codegen.cache.maxEntries`` (default 100);
+  a pass over more distinct classes than that evicts each class before
+  its next use, so every interleaved pass recompiles every class.  The
+  cap is a static conf, read once when the JVM's code generator is first
+  used, so it is a build conf: a session built by someone else keeps
+  Spark's 100.
 """
 
 from __future__ import annotations
@@ -45,6 +55,13 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
     return f"{min(24 * 1024, phys_bytes // 2**21)}m"
 
 
+# Entries of Spark's JVM-wide generated-class cache.  Sizing rule: the
+# smallest power of two at least twice the largest measured working set
+# (distinct classes one interleaved pass compiles).  Measured on a
+# 4-vCPU VM: perfbench's scan_shuffle pass ~190 classes; bench.py's
+# HEADLINE pass 801-963 at sf0.01 and 799 at sf0.1 -> 2048.
+CODEGEN_CACHE_ENTRIES = 2048
+
 # Confs that must be set at session-build time.
 BUILD_CONFS: dict[str, str] = {
     # local[32]: one shuffle partition per core; a real cluster would use
@@ -64,6 +81,8 @@ BUILD_CONFS: dict[str, str] = {
                                           default_driver_memory()),
     "spark.sql.parquet.enableVectorizedReader": "true",
     "spark.ui.enabled": "false",
+    # static: read once per JVM, so it cannot be set on a live session
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
 }
 
 
@@ -85,7 +104,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to a session we did not create.
 
     The driver hands ``queries()`` callables an externally-built session;
-    this pins the confs correctness depends on (timezone, AQE).
+    this pins the confs correctness depends on (timezone, AQE).  Build
+    confs cannot be applied here: ``spark.sql.codegen.cache.maxEntries``
+    is static (read once per JVM), so such a session keeps Spark's
+    100-entry generated-class cache and recompiles every class on each
+    interleaved pass over a working set larger than that.
 
     Memoized per session object: load_tables calls this on every query
     build, and each conf.set is a JVM round-trip.  The memo is guarded

@@ -61,6 +61,25 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return out
 
 
+def local_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in the column order of the DDL
+    ``schema``) as a driver-local ``LocalTableScan`` with exactly that
+    Spark schema: how a driver-computed table (constants, trained
+    vocabularies, a reranked list) enters a plan.  Built from a
+    pyarrow Table, so collecting or broadcasting it runs no Spark job;
+    ``createDataFrame`` of a Python list is a ``Scan ExistingRDD``: a
+    Python-worker job on every action or broadcast."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = [pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.table(cols, schema=arrow), struct)
+
+
 def _parse_bytes(v: str) -> int:
     """Spark byte-size conf strings: '134217728', '128m', '128MB', '4g'."""
     s = str(v).strip().lower()

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from results_ingestor_spark.operators.quantization import (
     codebook_relation, pq_encode, pq_train, subvector)
-from results_ingestor_spark.sources.tables import load_tables
+from results_ingestor_spark.sources.tables import load_tables, local_relation
 
 
 @pytest.fixture(scope="module")
@@ -39,6 +39,35 @@ def test_codebook_relation_is_local_and_runs_no_job(spark, books, jobs_run):
     assert [[(e["code"], list(e["c"])) for e in b]
             for b in rows[0]["__books"]] \
         == [list(enumerate(map(list, b))) for b in books]
+
+
+@pytest.mark.parametrize("rows,schema", [
+    ([(4, 4), (8, 2)], "b int, r int"),
+    ([(0.5,), (0.95,)], "sim double"),
+    ([(0, 0.25, 1.5, -2.0)],
+     "iteration long, loss double, w0 double, w1 double"),
+    ([(0, 3.5, 0.6, 0.6), (1, 1.25, 0.2, 0.8)],
+     "component int, eigenvalue double, explained_ratio double, "
+     "cumulative_ratio double"),
+    ([("ab", -1.5, 0), ("\x00", -9.0, 1)],
+     "piece string, logprob double, rank int"),
+    ([(1, 7, 1, 0.9, 0.63), (1, 3, 2, None, 0.1)],
+     "query_id long, cand_id long, mmr_rank int, "
+     "cosine double, mmr_score double"),
+])
+def test_local_relation_keeps_schema_and_runs_no_job(spark, jobs_run,
+                                                     rows, schema):
+    """Each driver-built table (the LSH S-curve grids, the classifier
+    trajectory, PCA eigenvalues, the unigram vocab, the MMR list) keeps
+    the schema ``createDataFrame`` of the Python rows gave it, and is a
+    driver-local scan whose collect runs no Spark job."""
+    rel = local_relation(spark, rows, schema)
+    assert rel.schema == spark.createDataFrame(rows, schema).schema
+    plan = rel._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    got, jobs = jobs_run(rel.collect)
+    assert jobs == 0
+    assert [tuple(r) for r in got] == rows
 
 
 def test_train_deterministic(emb, books):

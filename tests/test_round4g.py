@@ -1232,7 +1232,9 @@ def test_hill_tail_index_matches_python_model(spark, sf_dir):
 
 
 def test_lsh_s_curve_matches_closed_form(spark, sf_dir):
-    rows = QUERIES["dedup_lsh_s_curve"](spark, sf_dir).collect()
+    df = QUERIES["dedup_lsh_s_curve"](spark, sf_dir)
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+    rows = df.collect()
     for r in rows:
         s = r.sim_pct / 100
         assert r.p_candidate == round(1 - (1 - s ** r.r) ** r.b, 9)

@@ -138,7 +138,9 @@ def test_mmr_rerank_matches_numpy_and_diversifies(spark, sf_dir):
         brute_force_topk, mmr_rerank)
     from results_ingestor_spark.plans import QUERIES
 
-    got = QUERIES["ann_mmr_diverse_topk"](spark, sf_dir).collect()
+    df = QUERIES["ann_mmr_diverse_topk"](spark, sf_dir)
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    got = df.collect()
     emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     vecs = {int(r.vec_id): np.array(r.embedding, dtype=np.float64)
             for r in emb.itertuples()}

@@ -103,7 +103,9 @@ def test_covariance_and_pca_match_numpy_reference(spark, sf_dir):
     assert len(cov_rows) == 64 * 65 // 2
     np.testing.assert_allclose(got, want, atol=2e-6)
 
-    pca = QUERIES["embedding_pca_variance"](spark, sf_dir).collect()
+    pca_df = QUERIES["embedding_pca_variance"](spark, sf_dir)
+    assert "LocalTableScan" in pca_df._jdf.queryExecution().executedPlan().toString()
+    pca = pca_df.collect()
     w = np.linalg.eigvalsh(want)[::-1]
     total = w.sum()
     for r in pca:

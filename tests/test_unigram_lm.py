@@ -28,6 +28,7 @@ def test_trains_planted_word_and_normalizes(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     vocab, lls = train_unigram_lm(docs, vocab_size=8, seed_size=50,
                                   em_iters=3)
+    assert "LocalTableScan" in vocab._jdf.queryExecution().executedPlan().toString()
     v = {r["piece"]: r["logprob"] for r in vocab.collect()}
     # probabilities normalize exactly over the final inventory
     assert sum(math.exp(lp) for lp in v.values()) == pytest.approx(1.0)
