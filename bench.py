@@ -207,8 +207,11 @@ def main() -> None:
     }
     samples: dict[str, list[float]] = {
         n: [] for n in names + list(special)}
-    for name in names:  # warm pass (JIT, file listing)
+    first_pass = 0.0
+    for name in names:  # warm pass (JIT, file listing, first plan builds)
+        t0 = time.time()
         _run_noop(spark, qs, name, sf_dir)
+        first_pass += time.time() - t0
     for fn in special.values():
         fn()
     for _ in range(rounds):
@@ -281,6 +284,12 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "bench_rounds_interleaved": rounds,
+        # the untimed first pass over HEADLINE (first plan builds, but
+        # the flagship's, which the session warm-up made) vs the same
+        # entries' total in each timed pass
+        "first_pass_sec": round(first_pass, 3),
+        "warm_pass_sec": [round(sum(samples[n][p] for n in names), 3)
+                          for p in range(rounds)],
         "r01_subset_sec": round(
             sum(timings[n] for n in r01_set if n in timings), 3),
         "r03_subset_sec": round(

@@ -80,3 +80,12 @@ def codegen_compiles(spark) -> int:
     Spark's codegen cache (``session.CODEGEN_CACHE_ENTRIES``)."""
     return int(spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
                .METRIC_COMPILATION_TIME().getCount())
+
+
+def jobs_submitted(spark) -> int:
+    """Spark jobs this application has submitted so far: the DAG
+    scheduler's next job id, read synchronously.  Its difference over a
+    call is exactly the number of jobs the call submitted (AQE's stage
+    jobs included).  The status tracker is fed by the asynchronous
+    listener bus and can miss a job that already finished."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())

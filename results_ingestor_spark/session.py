@@ -22,6 +22,22 @@ scaled down for local[32] testing:
   cap is a static conf, read once when the JVM's code generator is first
   used, so it is a build conf: a session built by someone else keeps
   Spark's 100.
+* PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``).  PySpark 4.1 wraps
+  every ``F.*`` call and ``Column`` method to record the Python call
+  site for error messages; each wrapped call costs extra py4j round
+  trips and a failing ``import IPython`` path search (measured at
+  sf0.01 on a 4-vCPU VM: the flagship's build 0.48 -> 0.30 s and 3,779
+  -> 1,092 py4j calls with capture off).  Errors lose the Python call
+  site (the DataFrame query context).  The conf is static and PySpark
+  reads it once per process, when the first ``Column`` is built, so a
+  session built by someone else keeps capture on.
+* The package root shipped to Python workers
+  (``spark.executorEnv.PYTHONPATH``): pandas-UDF and ``mapInPandas``
+  entries unpickle functions from this package, so a driver started
+  outside the repository root would otherwise fail in its workers with
+  ``ModuleNotFoundError``.  A session built by someone else needs the
+  package on the caller's ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -83,6 +99,11 @@ BUILD_CONFS: dict[str, str] = {
     "spark.ui.enabled": "false",
     # static: read once per JVM, so it cannot be set on a live session
     "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    # static; PySpark caches it once per process (module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Python workers import this package (module docstring)
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))),
 }
 
 
@@ -108,7 +129,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     confs cannot be applied here: ``spark.sql.codegen.cache.maxEntries``
     is static (read once per JVM), so such a session keeps Spark's
     100-entry generated-class cache and recompiles every class on each
-    interleaved pass over a working set larger than that.
+    interleaved pass over a working set larger than that; it keeps
+    PySpark's call-site capture on (static too), and its Python workers
+    find this package only through the caller's ``PYTHONPATH``.
 
     Memoized per session object: load_tables calls this on every query
     build, and each conf.set is a JVM round-trip.  The memo is guarded

@@ -23,6 +23,21 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def fresh_alias(tmp_path):
+    """``fresh_alias(sf_dir)`` -> a new path (a symlink) to ``sf_dir``,
+    so the caches keyed on the absolute path (load_tables, the plan
+    memo) miss."""
+    import uuid
+
+    def alias(sf_dir):
+        link = tmp_path / f"alias-{uuid.uuid4().hex[:8]}"
+        link.symlink_to(os.path.abspath(sf_dir), target_is_directory=True)
+        return str(link)
+
+    return alias
+
+
 @pytest.fixture(scope="session")
 def jobs_run(spark):
     """``jobs_run(fn)`` -> (fn's result, number of Spark jobs fn ran),

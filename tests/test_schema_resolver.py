@@ -5,7 +5,6 @@ building the untyped CSV ingest runs no Spark job."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 
@@ -17,13 +16,6 @@ from results_ingestor_spark.sources.tables import TABLE_NAMES, load_tables
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PINNED = os.path.join(ROOT, "perfbench", "data", "sf0.01")
-
-
-def _fresh_alias(tmp_path, sf_dir):
-    """A new path to ``sf_dir``, so load_tables misses its cache."""
-    alias = tmp_path / f"alias-{uuid.uuid4().hex[:8]}"
-    alias.symlink_to(os.path.abspath(sf_dir), target_is_directory=True)
-    return str(alias)
 
 
 def _assert_parity(spark, corpus):
@@ -63,13 +55,14 @@ def test_parquet_schema_parity_spark_written_directory(spark, sf_dir,
             .schema == spark.read.parquet(parted).schema)
 
 
-def test_load_tables_in_non_utc_external_session(spark, sf_dir, tmp_path):
+def test_load_tables_in_non_utc_external_session(spark, sf_dir,
+                                                 fresh_alias):
     """An external session in another timezone and without the parquet
     nanosAsLong conf: load_tables pins both before it reads the footers,
     so every table has the schema the inferring reader gives."""
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    loaded = load_tables(spark, _fresh_alias(tmp_path, sf_dir))
+    loaded = load_tables(spark, fresh_alias(sf_dir))
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     for t in TABLE_NAMES:
         inferred = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
@@ -78,20 +71,21 @@ def test_load_tables_in_non_utc_external_session(spark, sf_dir, tmp_path):
         assert loaded[t].schema == inferred.schema, t
 
 
-def test_load_tables_runs_no_job(spark, sf_dir, tmp_path, jobs_run):
+def test_load_tables_runs_no_job(spark, sf_dir, fresh_alias, jobs_run):
     path = os.path.join(sf_dir, "orders.parquet")
     _, inferring = jobs_run(lambda: spark.read.parquet(path))
     assert inferring >= 1  # the counter sees the inference job it replaced
     loaded, jobs = jobs_run(
-        lambda: load_tables(spark, _fresh_alias(tmp_path, sf_dir)))
+        lambda: load_tables(spark, fresh_alias(sf_dir)))
     assert jobs == 0
     assert sorted(loaded) == sorted(TABLE_NAMES)
 
 
-def test_table_cache_evicts_other_applications(spark, sf_dir, tmp_path):
+def test_table_cache_evicts_other_applications(spark, sf_dir,
+                                               fresh_alias):
     stale = ("app-stopped-0000", os.path.abspath(sf_dir), "orders")
     tables._TABLE_CACHE[stale] = None
-    load_tables(spark, _fresh_alias(tmp_path, sf_dir), ("region",))
+    load_tables(spark, fresh_alias(sf_dir), ("region",))
     app = spark.sparkContext.applicationId
     assert stale not in tables._TABLE_CACHE
     assert {k[0] for k in tables._TABLE_CACHE} == {app}

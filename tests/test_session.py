@@ -56,3 +56,38 @@ def test_interleaved_pass_reuses_every_generated_class(spark, sf_dir):
 
     run_pass()  # cold, or partly cached by earlier tests
     assert run_pass() == 0
+
+
+def test_call_site_capture_is_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+def test_python_workers_import_the_package_outside_the_repo(sf_dir,
+                                                           tmp_path):
+    """A driver that puts the repository on ``sys.path`` but runs from
+    another directory, with no ``PYTHONPATH``: the mapInPandas and
+    pandas-UDF entries still find the package in their Python workers."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from results_ingestor_spark.session import get_spark\n"
+        "from results_ingestor_spark.plans import QUERIES\n"
+        "spark = get_spark('workers', master='local[2]')\n"
+        "for q in ('multimodal_resize', 'unigram_lm_tokenize_docs'):\n"
+        f"    print(q, QUERIES[q](spark, {os.path.abspath(sf_dir)!r}).count())\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    done = subprocess.run([sys.executable, "-c", code], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert "ModuleNotFoundError" not in done.stderr
