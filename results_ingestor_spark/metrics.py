@@ -89,3 +89,31 @@ def jobs_submitted(spark) -> int:
     jobs included).  The status tracker is fed by the asynchronous
     listener bus and can miss a job that already finished."""
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def jvm_gc(spark) -> dict[str, float]:
+    """The driver JVM's garbage collection so far, from its GC and
+    memory-pool MXBeans: ``young_gc_count``, ``young_gc_ms``,
+    ``full_gc_count``, ``full_gc_ms`` (collection time, which is pause
+    time under a stop-the-world collector such as the parallel one) and
+    ``old_gen_used_after_gc_mb`` (the old generation's occupancy right
+    after its last collection, 0 before the first).  Counts and times
+    are cumulative, so the delta over a call is what that call cost; in
+    local mode the driver JVM does all execution.  A collector whose
+    name marks it young (``PS Scavenge``, ``G1 Young Generation``,
+    ``Copy``, ``ParNew``) counts as young, every other one as full."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    out = {"young_gc_count": 0.0, "young_gc_ms": 0.0,
+           "full_gc_count": 0.0, "full_gc_ms": 0.0,
+           "old_gen_used_after_gc_mb": 0.0}
+    for bean in mf.getGarbageCollectorMXBeans():
+        kind = ("young" if re.search(r"Young|Scavenge|Copy|ParNew",
+                                     bean.getName()) else "full")
+        out[f"{kind}_gc_count"] += bean.getCollectionCount()
+        out[f"{kind}_gc_ms"] += bean.getCollectionTime()
+    for pool in mf.getMemoryPoolMXBeans():
+        if re.search(r"Old Gen|Tenured", pool.getName()):
+            after = pool.getCollectionUsage()
+            if after is not None:
+                out["old_gen_used_after_gc_mb"] = after.getUsed() / 2**20
+    return out

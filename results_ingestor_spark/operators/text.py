@@ -52,10 +52,6 @@ def shingles_expr(tokens_sql: str, n: int = 3) -> Column:
         f"ELSE array(concat_ws(' ', {tokens_sql})) END)")
 
 
-def token_count(text: Column | str = "text") -> Column:
-    return F.size(tokens(text))
-
-
 def stopword_ratio(text: Column | str = "text") -> Column:
     toks = tokens(text)
     in_list = ", ".join(f"'{w}'" for w in STOPWORDS)

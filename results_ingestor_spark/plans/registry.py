@@ -10,11 +10,13 @@ entries) that produces the same plan every time.
 The memo key is (session, absolute ``sf_dir``, entry name, fingerprint
 of the session's SQL conf as the call finds it).  A build is stored, as
 the analyzed logical plan of its wire-cast output, only when it
-submitted no Spark job, left the SQL conf as it found it and returned no
-checkpoint scope.  A hit hands out a new Dataset over that plan, so
-every action still runs Catalyst optimization, physical planning, AQE
-and execution from scratch; only plan construction, its py4j traffic
-and analysis are skipped.  No data and no result is cached.
+submitted no Spark job, left the SQL conf as it found it, returned no
+checkpoint scope and reads no RDD (a ``LogicalRDD`` or
+``ExternalRDD`` leaf, in the plan or a subquery).  A hit hands out a
+new Dataset over that plan, so every action still runs Catalyst
+optimization, physical planning, AQE and execution from scratch; only
+plan construction, its py4j traffic and analysis are skipped.  No data
+and no result is cached.
 
 Why a stored plan is exact: a build that ran no job read nothing but
 parquet footers and CSV header lines on the driver, which
@@ -27,11 +29,13 @@ stored, because a hit would skip that change; the next call, under the
 changed conf, is.  Builds that run jobs (eager checkpoints, seed
 collects, Lloyd iterations) may depend on what those jobs return and
 are rebuilt on every call, as are results with a checkpoint scope,
-whose blocks ``ckpt.release_result`` frees after use.  A hit is a new
-Dataset rather than the stored one because a Dataset keeps its
-``QueryExecution``: after a ``collect`` it holds its executed plan and
-shuffle dependencies, and its Python attributes would be shared between
-callers.
+whose blocks ``ckpt.release_result`` frees after use, and plans over an
+RDD: a lazy ``localCheckpoint(eager=False)`` runs no job at build time,
+so only its ``LogicalRDD`` leaf shows that the plan holds data a stored
+plan would hand to the next call.  A hit is a new Dataset rather than
+the stored one because a Dataset keeps its ``QueryExecution``: after a
+``collect`` it holds its executed plan and shuffle dependencies, and its
+Python attributes would be shared between callers.
 
 Plans are served only to the session that analyzed them; a miss evicts
 the entries of every other application (a stopped one's plans can never
@@ -44,6 +48,7 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 from collections.abc import Callable
 from typing import Any
 
@@ -126,6 +131,14 @@ def _conf_hash(jsession) -> int:
     return jsession.sessionState().conf().getAllConfs().hashCode()
 
 
+def _reads_rdd(plan) -> bool:
+    """Whether an analyzed plan has a ``LogicalRDD`` or ``ExternalRDD``
+    leaf.  Its tree string (one py4j call) prints every node, subqueries
+    included, one per line after the tree's ``+-``/``:`` prefix."""
+    return re.search(r"^[\s:+|-]*(?:Logical|External)RDD\b",
+                     plan.toString(), re.M) is not None
+
+
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query.  ``oracle`` is ANSI SQL DuckDB runs over the same
     parquet tables (pre-registered views); omit it only for genuinely
@@ -157,7 +170,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             df = _ntz_wire(fn(spark, sf_dir))
             if (jobs_submitted(spark) == first_job and _conf_hash(js) == conf
                     and getattr(df, "_ckpt_scope", None) is None):
-                _PLAN_MEMO[key] = (app, df._jdf.queryExecution().analyzed())
+                plan = df._jdf.queryExecution().analyzed()
+                if not _reads_rdd(plan):
+                    _PLAN_MEMO[key] = (app, plan)
             return df
 
         QUERIES[name] = wrapped

@@ -38,11 +38,27 @@ scaled down for local[32] testing:
   outside the repository root would otherwise fail in its workers with
   ``ModuleNotFoundError``.  A session built by someone else needs the
   package on the caller's ``PYTHONPATH``.
+* Tungsten pages sized to the page table, not to the heap
+  (``spark.buffer.pageSize``, ``page_size_bytes``).  Every sort, hash
+  aggregate and hash map of every task allocates at least one page.
+  Spark derives the page from heap / cores (32 MiB on a 4 GiB, 4-core
+  session), so kilobytes of sf0.01 data took 32 MiB ``long[]`` pages
+  that the heap allocator pools, young GCs promote and only a full GC
+  frees.  The rule here is the smallest power of two >= 1 MiB whose
+  8,192-entry page table covers twice the heap (4g -> 1 MiB, 24g ->
+  8 MiB).  Measured with perfbench's scan_shuffle on a 4-vCPU VM,
+  4 GiB heap under the parallel collector: heap after young GC peaked
+  at 1,123 MB with Spark's page and 244 MB with 1 MiB (the same 85 MB
+  live after a full GC), young-GC pause 741 -> 391 ms, peak RSS
+  3,276 -> 2,084 MB (10 of 10 pairs; bench_runs/page_size.md).  The
+  conf is static, so a session built by someone else keeps Spark's
+  page.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -78,6 +94,45 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
 # HEADLINE pass 801-963 at sf0.01 and 799 at sf0.1 -> 2048.
 CODEGEN_CACHE_ENTRIES = 2048
 
+# TaskMemoryManager.PAGE_TABLE_SIZE: page numbers one task can hold at once.
+PAGE_TABLE_SIZE = 8192
+
+_BYTE_UNITS = {"b": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40,
+               "p": 2**50}
+
+
+def memory_bytes(mem: str) -> int:
+    """A JVM memory conf in bytes: ``"4g"``, ``"7680m"``, ``"512mb"``; a
+    bare number is MiB, as Spark reads ``spark.driver.memory``."""
+    m = re.fullmatch(r"\s*(\d+)\s*([bkmgtp]?)b?\s*", mem.lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {mem!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2) or "m"]
+
+
+def page_size_bytes(heap: str) -> int:
+    """Tungsten page size for a JVM heap of ``heap``: the smallest power
+    of two >= 1 MiB with PAGE_TABLE_SIZE pages covering twice the heap.
+
+    Why it is safe: a task's pages come out of execution memory, which
+    is less than the heap, so at most heap / page pages of the full size
+    are live at once, half of the page table.  The other half covers the
+    pointer arrays and hash-map arrays smaller than a page (one or two
+    per sorter or map).  A task therefore reaches its memory limit, and
+    spills, before it runs out of page numbers; running out would be an
+    ``IllegalStateException``, not a spill.  A page smaller than
+    Spark's own only changes how a consumer's memory is cut up: a record
+    larger than the page still gets a page of its own size."""
+    need = 2 * memory_bytes(heap)
+    page = 2**20
+    while PAGE_TABLE_SIZE * page < need:
+        page *= 2
+    return page
+
+
+_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                default_driver_memory())
+
 # Confs that must be set at session-build time.
 BUILD_CONFS: dict[str, str] = {
     # local[32]: one shuffle partition per core; a real cluster would use
@@ -93,8 +148,11 @@ BUILD_CONFS: dict[str, str] = {
     # at 8g vs tight 1.2x spreads at 24g — same min-statistics).  A real
     # cluster sizes executor memory separately; this knob only exists for
     # local mode.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
-                                          default_driver_memory()),
+    "spark.driver.memory": _DRIVER_MEMORY,
+    # static; follows the heap (module docstring, page_size_bytes).  No
+    # executor memory is set: in local mode the driver JVM runs every
+    # task, and Spark's 1g executor default needs no larger page.
+    "spark.buffer.pageSize": str(page_size_bytes(_DRIVER_MEMORY)),
     "spark.sql.parquet.enableVectorizedReader": "true",
     "spark.ui.enabled": "false",
     # static: read once per JVM, so it cannot be set on a live session
@@ -130,8 +188,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     is static (read once per JVM), so such a session keeps Spark's
     100-entry generated-class cache and recompiles every class on each
     interleaved pass over a working set larger than that; it keeps
-    PySpark's call-site capture on (static too), and its Python workers
-    find this package only through the caller's ``PYTHONPATH``.
+    PySpark's call-site capture on (static too), keeps Spark's Tungsten
+    page size (``spark.buffer.pageSize``, static: heap / cores, 32 MiB on
+    a 4 GiB 4-core session, whose freed pages fill the old generation),
+    and its Python workers find this package only through the caller's
+    ``PYTHONPATH``.
 
     Memoized per session object: load_tables calls this on every query
     build, and each conf.set is a JVM round-trip.  The memo is guarded

@@ -3,7 +3,7 @@ actually skipped data, not just that the plan said it would."""
 
 from pyspark.sql import functions as F
 
-from results_ingestor_spark.metrics import _to_num, execution_metrics
+from results_ingestor_spark.metrics import _to_num, execution_metrics, jvm_gc
 
 
 def test_to_num_formats():
@@ -14,6 +14,20 @@ def test_to_num_formats():
                    "128.0 MiB (1.0 MiB, 2.0 MiB, 3.0 MiB (s: t))"
                    .split("\n")[0] + " 128.0 MiB") is None or True
     assert _to_num("0.0 B") == 0
+
+
+def test_jvm_gc_reads_collections_and_old_gen(spark):
+    """Counts and pause ms only grow; a requested full collection shows
+    up as one, and leaves the old generation's occupancy recorded."""
+    before = jvm_gc(spark)
+    assert set(before) == {"young_gc_count", "young_gc_ms", "full_gc_count",
+                           "full_gc_ms", "old_gen_used_after_gc_mb"}
+    spark._jvm.java.lang.System.gc()
+    after = jvm_gc(spark)
+    assert after["full_gc_count"] > before["full_gc_count"]
+    assert all(after[k] >= before[k] for k in
+               ("young_gc_count", "young_gc_ms", "full_gc_ms"))
+    assert after["old_gen_used_after_gc_mb"] > 0
 
 
 def test_partition_pruning_measured_in_bytes(spark, sf_dir, tmp_path):

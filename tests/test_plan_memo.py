@@ -1,7 +1,7 @@
 """The per-session plan memo in ``plans/registry.py``: a job-free build
 is analyzed once per (session, sf_dir, entry, conf) and every later call
-gets a new Dataset over that plan; builds that run jobs or carry a
-checkpoint scope are rebuilt on every call."""
+gets a new Dataset over that plan; builds that run jobs, carry a
+checkpoint scope or read an RDD are rebuilt on every call."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from results_ingestor_spark.metrics import jobs_submitted
 from results_ingestor_spark.plans import QUERIES, registry
@@ -157,6 +158,28 @@ def test_memo_rule_on_probe_entries(spark, sf_dir, probe_entry):
         entry, calls = probe_entry(fn)
         outs = [entry(spark, sf_dir) for _ in range(3)]
         assert len(calls) == (1 if memoized else 3), fn.__name__
+        assert all(o.count() == 5 for o in outs)
+
+
+def test_plan_over_a_lazy_checkpoint_is_rebuilt(spark, sf_dir,
+                                                probe_entry):
+    """A lazy ``localCheckpoint`` runs no job at build time and carries
+    no scope, so only its ``LogicalRDD`` leaf keeps the plan out of the
+    memo, in the main tree or in a scalar subquery."""
+
+    def lazy(s):
+        return s.range(5).localCheckpoint(eager=False)
+
+    def lazy_in_subquery(s):
+        top = lazy(s).agg(F.max("id"))
+        return s.range(8).where(F.col("id") <= top.scalar())
+
+    for fn in (lazy, lazy_in_subquery):
+        entry, calls = probe_entry(fn)
+        j0 = jobs_submitted(spark)
+        outs = [entry(spark, sf_dir) for _ in range(3)]
+        assert jobs_submitted(spark) == j0, fn.__name__  # no build job
+        assert len(calls) == 3, fn.__name__
         assert all(o.count() == 5 for o in outs)
 
 

@@ -1,11 +1,14 @@
-"""The session factory's host-derived defaults and its codegen cache."""
+"""The session factory's host-derived defaults, its codegen cache and
+its Tungsten page size."""
 
 from __future__ import annotations
 
 from results_ingestor_spark.session import (
-    CODEGEN_CACHE_ENTRIES, default_driver_memory)
+    BUILD_CONFS, CODEGEN_CACHE_ENTRIES, PAGE_TABLE_SIZE, default_driver_memory,
+    memory_bytes, page_size_bytes)
 
 GIB = 2**30
+MIB = 2**20
 
 
 def test_driver_memory_is_24g_capped_at_half_of_ram():
@@ -13,6 +16,42 @@ def test_driver_memory_is_24g_capped_at_half_of_ram():
     assert default_driver_memory(48 * GIB) == "24576m"
     assert default_driver_memory(15 * GIB) == "7680m"
     assert default_driver_memory(4 * GIB) == "2048m"
+
+
+def test_page_size_covers_twice_the_heap_from_1_mib():
+    assert page_size_bytes("2g") == 1 * MIB
+    assert page_size_bytes("4g") == 1 * MIB
+    assert page_size_bytes("4096m") == 1 * MIB
+    assert page_size_bytes("24g") == 8 * MIB
+    assert page_size_bytes("24576m") == 8 * MIB
+    assert page_size_bytes("64g") == 16 * MIB
+    assert memory_bytes("7680") == 7680 * MIB  # a bare number is MiB
+    assert memory_bytes("512mb") == 512 * MIB
+
+
+def test_page_table_covers_every_default_heap():
+    """Any heap ``default_driver_memory`` can pick gets a page whose
+    table covers twice the heap, and the page is the smallest such
+    power of two (>= 1 MiB)."""
+    for mib in range(1, 24 * 1024 + 1):
+        heap = mib * MIB
+        page = page_size_bytes(f"{mib}m")
+        assert page & (page - 1) == 0 and page >= MIB
+        assert PAGE_TABLE_SIZE * page >= 2 * heap
+        assert page == MIB or PAGE_TABLE_SIZE * page // 2 < 2 * heap
+
+
+def test_session_uses_the_page_size_rule(spark):
+    jvm = spark._jvm
+    page = page_size_bytes(BUILD_CONFS["spark.driver.memory"])
+    assert (jvm.org.apache.spark.SparkEnv.get().memoryManager()
+            .pageSizeBytes()) == page
+    # the page table size the rule assumes is Spark's
+    field = (jvm.java.lang.Class.forName(
+        "org.apache.spark.memory.TaskMemoryManager")
+        .getDeclaredField("PAGE_TABLE_SIZE"))
+    field.setAccessible(True)
+    assert field.getInt(None) == PAGE_TABLE_SIZE
 
 
 def test_driver_memory_default_fits_the_host():

@@ -10,7 +10,11 @@ is the min over the two warm runs, and the Janino compiles of each of
 the three runs (``metrics.codegen_compiles``) are listed.  The runs are
 back to back, so an entry's few classes stay in Spark's codegen cache:
 this hides cache thrash, which only interleaved passes over the registry
-(bench.py, perfbench) show.
+(bench.py, perfbench) show.  ``gc`` is the driver JVM's garbage
+collection over the entry's three runs (``metrics.jvm_gc``: young and
+full collections and their ms, and the old generation's occupancy after
+its last collection at the end), so a memory regression shows up as a
+difference between two records.
 
 Usage: python tools/profile_queries.py [name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -29,7 +33,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     import bench
     import __spark_entry__ as e
-    from results_ingestor_spark.metrics import codegen_compiles, jobs_submitted
+    from results_ingestor_spark.metrics import (
+        codegen_compiles, jobs_submitted, jvm_gc)
     from results_ingestor_spark.operators.ckpt import release_result
     from results_ingestor_spark.plans import registry
     from results_ingestor_spark.session import get_spark
@@ -47,6 +52,7 @@ def main() -> None:
     out = {}
     for name in names:
         builds, execs, compiles = [], [], []
+        gc0 = jvm_gc(spark)
         for rep in range(3):  # rep 0 = the first build in the session
             c0 = codegen_compiles(spark)
             j0 = jobs_submitted(spark)
@@ -62,6 +68,9 @@ def main() -> None:
             compiles.append(codegen_compiles(spark) - c0)
             builds.append(t1 - t0)
             execs.append(t2 - t1)
+        gc1 = jvm_gc(spark)
+        gc = {k: round(v - gc0[k] if k.endswith(("_count", "_ms")) else v, 1)
+              for k, v in gc1.items()}
         base = os.path.abspath(sf_dir)
         memoized = any(k[1:3] == (base, name) for k in registry._PLAN_MEMO)
         why = ", ".join(([f"{jobs} build jobs"] if jobs else [])
@@ -73,11 +82,12 @@ def main() -> None:
                                         zip(builds[1:], execs[1:])), 3),
                      "memoized": memoized,
                      "not_memoized_because": why or None,
-                     "compiles": compiles}
+                     "compiles": compiles,
+                     "gc": gc}
         print(f"{name}: first_build={out[name]['first_build']} "
               f"warm_build={out[name]['warm_build']} exec={out[name]['exec']} "
               f"memoized={memoized}{f' ({why})' if why else ''} "
-              f"compiles={compiles}", flush=True)
+              f"compiles={compiles} gc={gc}", flush=True)
     print(json.dumps(out))
 
 
