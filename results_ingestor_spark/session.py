@@ -45,20 +45,18 @@ scaled down for local[32] testing:
   session), so kilobytes of sf0.01 data took 32 MiB ``long[]`` pages
   that the heap allocator pools, young GCs promote and only a full GC
   frees.  The rule here is the smallest power of two >= 1 MiB whose
-  8,192-entry page table covers twice the heap (4g -> 1 MiB, 24g ->
-  8 MiB).  Measured with perfbench's scan_shuffle on a 4-vCPU VM,
-  4 GiB heap under the parallel collector: heap after young GC peaked
-  at 1,123 MB with Spark's page and 244 MB with 1 MiB (the same 85 MB
-  live after a full GC), young-GC pause 741 -> 391 ms, peak RSS
-  3,276 -> 2,084 MB (10 of 10 pairs; bench_runs/page_size.md).  The
-  conf is static, so a session built by someone else keeps Spark's
-  page.
+  8,192-entry page table covers twice the heap, less the 16-byte array
+  header so that under G1 a page is never a humongous object (4g ->
+  1 MiB - 16 B, 24g -> 8 MiB - 16 B).  Measured with perfbench's
+  scan_shuffle on a 4-vCPU VM, 4 GiB heap under the parallel
+  collector: peak RSS 2,983 -> 2,041 MB (10 of 10 pairs;
+  bench_runs/page_size.md).  The conf is static, so a session built by
+  someone else keeps Spark's page.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import SparkSession
 
@@ -96,23 +94,28 @@ CODEGEN_CACHE_ENTRIES = 2048
 
 # TaskMemoryManager.PAGE_TABLE_SIZE: page numbers one task can hold at once.
 PAGE_TABLE_SIZE = 8192
+# Platform.LONG_ARRAY_OFFSET: the header of the long[] an on-heap page is.
+LONG_ARRAY_OFFSET = 16
 
-_BYTE_UNITS = {"b": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40,
-               "p": 2**50}
 
-
-def memory_bytes(mem: str) -> int:
-    """A JVM memory conf in bytes: ``"4g"``, ``"7680m"``, ``"512mb"``; a
-    bare number is MiB, as Spark reads ``spark.driver.memory``."""
-    m = re.fullmatch(r"\s*(\d+)\s*([bkmgtp]?)b?\s*", mem.lower())
-    if m is None:
-        raise ValueError(f"not a memory size: {mem!r}")
-    return int(m.group(1)) * _BYTE_UNITS[m.group(2) or "m"]
+def parse_bytes(v: str) -> int:
+    """Spark byte-size conf strings: '134217728', '128m', '128MB', '4g'."""
+    s = str(v).strip().lower()
+    mult = 1
+    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
+                      ("tb", 1 << 40), ("k", 1 << 10), ("m", 1 << 20),
+                      ("g", 1 << 30), ("t", 1 << 40), ("b", 1)):
+        if s.endswith(suffix):
+            s, mult = s[: -len(suffix)], m
+            break
+    return int(s) * mult
 
 
 def page_size_bytes(heap: str) -> int:
-    """Tungsten page size for a JVM heap of ``heap``: the smallest power
-    of two >= 1 MiB with PAGE_TABLE_SIZE pages covering twice the heap.
+    """Tungsten page size for a JVM heap of ``heap`` (a bare number is
+    MiB, as Spark reads ``spark.driver.memory``): the smallest power of
+    two >= 1 MiB with PAGE_TABLE_SIZE of them covering twice the heap,
+    less the 16-byte ``long[]`` header.
 
     Why it is safe: a task's pages come out of execution memory, which
     is less than the heap, so at most heap / page pages of the full size
@@ -122,12 +125,28 @@ def page_size_bytes(heap: str) -> int:
     spills, before it runs out of page numbers; running out would be an
     ``IllegalStateException``, not a spill.  A page smaller than
     Spark's own only changes how a consumer's memory is cut up: a record
-    larger than the page still gets a page of its own size."""
-    need = 2 * memory_bytes(heap)
+    larger than the page still gets a page of its own size.
+
+    Why the header comes off: under G1 an object larger than half a
+    region is humongous, allocated outside the young generation in
+    whole regions.  JDK 17 sizes a region as the smallest power of two
+    >= heap / 2048 (1-32 MiB), and the power of two above covers heap /
+    4096: it is exactly half a region, so a page with its header must
+    not exceed it.  Spark takes the header off its own default page
+    under G1, but not off a page that is set.  Every heap above 2 GiB
+    up to 64 GiB then allocates its pages in the young generation; up
+    to 2 GiB a page fills one 1 MiB region, as Spark's own 1 MiB floor
+    does.  Measured on the sf0.1 flagship rollup at a 6 GiB heap (4 MiB
+    regions): at most 241 humongous regions with 2 MiB pages, 44 (none
+    of them pages) with the header off (bench_runs/page_size.md).  At a
+    4 GiB heap the page falls just below ``HeapMemoryAllocator``'s
+    1 MiB pooling threshold, so freed pages are not pooled."""
+    mem = heap.strip()
+    need = 2 * parse_bytes(mem + "m" if mem.isdigit() else mem)
     page = 2**20
     while PAGE_TABLE_SIZE * page < need:
         page *= 2
-    return page
+    return page - LONG_ARRAY_OFFSET
 
 
 _DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM",

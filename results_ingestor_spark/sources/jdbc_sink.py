@@ -27,10 +27,13 @@ def write_jdbc_append(df: DataFrame, url: str, table: str,
     contrast to the reference's row-wise to_sql.  The default, 1,000,
     is Spark's own: each writing task's statement holds one batch's
     parameter objects until ``executeBatch``, and a 10,000-row batch's
-    outlive a young GC and are promoted.  On perfbench's ingest_sink
-    loop (embedded Derby, 4 GiB heap) 1,000-row batches lowered peak
-    RSS 2,880 -> 2,755 MB (4 of 4 pairs) at the same pass time
-    (bench_runs/jdbc_batch_ingest_ab.jsonl).  ``num_partitions``
+    outlive a young GC and are promoted.  Measured on a 4-vCPU VM with
+    embedded Derby and only the batch size changed: perfbench's
+    ingest_sink (4 GiB heap) peak RSS 3,306 -> 3,013 MB in 10 of 10
+    pairs, pass time unresolved (+1.1 %, within run-to-run spread); the
+    sf0.1 flagship rollup (6 GiB heap, G1) peak heap after a young GC
+    3.2-4.1 -> 2.1-2.2 GB in 3 runs each (bench_runs/page_size.md).
+    ``num_partitions``
     caps concurrent connections (coalesce, no shuffle).  ``driver``
     names the JDBC driver class when the URL scheme alone can't
     resolve it (e.g. embedded Derby in tests).

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from results_ingestor_spark.session import tune_session
+from results_ingestor_spark.session import parse_bytes, tune_session
 from results_ingestor_spark.sources.resolver import parquet_schema
 
 TABLE_NAMES = (
@@ -80,19 +80,6 @@ def local_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
     return spark.createDataFrame(pa.table(cols, schema=arrow), struct)
 
 
-def _parse_bytes(v: str) -> int:
-    """Spark byte-size conf strings: '134217728', '128m', '128MB', '4g'."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("tb", 1 << 40), ("k", 1 << 10), ("m", 1 << 20),
-                      ("g", 1 << 30), ("t", 1 << 40), ("b", 1)):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    return int(s) * mult
-
-
 def ensure_min_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     """Repartition only when the upstream scan yields fewer splits than
     cores (small files / few parquet row groups — a local-testdata
@@ -132,9 +119,9 @@ def ensure_min_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     conf = spark.conf
-    max_split = _parse_bytes(
+    max_split = parse_bytes(
         conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    open_cost = _parse_bytes(
+    open_cost = parse_bytes(
         conf.get("spark.sql.files.openCostInBytes", "4MB"))
     try:
         files = df.inputFiles()

@@ -4,8 +4,8 @@ its Tungsten page size."""
 from __future__ import annotations
 
 from results_ingestor_spark.session import (
-    BUILD_CONFS, CODEGEN_CACHE_ENTRIES, PAGE_TABLE_SIZE, default_driver_memory,
-    memory_bytes, page_size_bytes)
+    BUILD_CONFS, CODEGEN_CACHE_ENTRIES, LONG_ARRAY_OFFSET, PAGE_TABLE_SIZE,
+    default_driver_memory, page_size_bytes, parse_bytes)
 
 GIB = 2**30
 MIB = 2**20
@@ -19,26 +19,48 @@ def test_driver_memory_is_24g_capped_at_half_of_ram():
 
 
 def test_page_size_covers_twice_the_heap_from_1_mib():
-    assert page_size_bytes("2g") == 1 * MIB
-    assert page_size_bytes("4g") == 1 * MIB
-    assert page_size_bytes("4096m") == 1 * MIB
-    assert page_size_bytes("24g") == 8 * MIB
-    assert page_size_bytes("24576m") == 8 * MIB
-    assert page_size_bytes("64g") == 16 * MIB
-    assert memory_bytes("7680") == 7680 * MIB  # a bare number is MiB
-    assert memory_bytes("512mb") == 512 * MIB
+    """A power of two >= 1 MiB less the 16-byte ``long[]`` header."""
+    assert page_size_bytes("2g") == 1 * MIB - 16
+    assert page_size_bytes("4g") == 1 * MIB - 16
+    assert page_size_bytes("4096m") == 1 * MIB - 16
+    assert page_size_bytes("4096") == 1 * MIB - 16  # a bare number is MiB
+    assert page_size_bytes("6g") == 2 * MIB - 16
+    assert page_size_bytes("24g") == 8 * MIB - 16
+    assert page_size_bytes("24576m") == 8 * MIB - 16
+    assert page_size_bytes("64g") == 16 * MIB - 16
+    assert parse_bytes("512mb") == 512 * MIB
+    assert parse_bytes("134217728") == 128 * MIB
+
+
+def _g1_region(heap: int) -> int:
+    """JDK 17's ergonomic G1 region: the smallest power of two >=
+    heap / 2048, clamped to 1-32 MiB."""
+    region = MIB
+    while region < heap / 2048 and region < 32 * MIB:
+        region *= 2
+    return region
 
 
 def test_page_table_covers_every_default_heap():
     """Any heap ``default_driver_memory`` can pick gets a page whose
-    table covers twice the heap, and the page is the smallest such
-    power of two (>= 1 MiB)."""
+    table, counted in whole arrays (page plus header), covers twice the
+    heap; the array is the smallest such power of two (>= 1 MiB).  From
+    2 GiB up the array is at most half a G1 region, so no page is a
+    humongous object; at 2 GiB and below it fills one 1 MiB region."""
     for mib in range(1, 24 * 1024 + 1):
         heap = mib * MIB
         page = page_size_bytes(f"{mib}m")
-        assert page & (page - 1) == 0 and page >= MIB
-        assert PAGE_TABLE_SIZE * page >= 2 * heap
-        assert page == MIB or PAGE_TABLE_SIZE * page // 2 < 2 * heap
+        array = page + LONG_ARRAY_OFFSET
+        assert array & (array - 1) == 0 and array >= MIB
+        assert PAGE_TABLE_SIZE * array >= 2 * heap
+        assert array == MIB or PAGE_TABLE_SIZE * array // 2 < 2 * heap
+        # the header costs 128 KiB of coverage: still more than three
+        # times the execution memory a task can take (0.6 of the heap)
+        assert PAGE_TABLE_SIZE * page >= 3 * 0.6 * heap
+        if heap > 2 * GIB:
+            assert array <= _g1_region(heap) // 2, mib
+        else:
+            assert array == _g1_region(heap), mib
 
 
 def test_session_uses_the_page_size_rule(spark):
@@ -52,6 +74,18 @@ def test_session_uses_the_page_size_rule(spark):
         .getDeclaredField("PAGE_TABLE_SIZE"))
     field.setAccessible(True)
     assert field.getInt(None) == PAGE_TABLE_SIZE
+    # so is the array header, and the region model is this JVM's
+    assert (jvm.org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET
+            == LONG_ARRAY_OFFSET)
+    diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    if diag.getVMOption("UseG1GC").getValue() == "true":
+        heap = jvm.java.lang.Runtime.getRuntime().maxMemory()
+        region = int(diag.getVMOption("G1HeapRegionSize").getValue())
+        assert region == _g1_region(heap)
+        if heap > 2 * GIB:
+            assert page + LONG_ARRAY_OFFSET <= region // 2
 
 
 def test_driver_memory_default_fits_the_host():
