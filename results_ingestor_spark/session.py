@@ -119,7 +119,7 @@ def page_size_bytes(heap: str) -> int:
 
     Why it is safe: a task's pages come out of execution memory, which
     is less than the heap, so at most heap / page pages of the full size
-    are live at once, half of the page table.  The other half covers the
+    are live at once, about half of the page table.  The rest covers the
     pointer arrays and hash-map arrays smaller than a page (one or two
     per sorter or map).  A task therefore reaches its memory limit, and
     spills, before it runs out of page numbers; running out would be an
